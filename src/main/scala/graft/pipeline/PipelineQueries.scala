@@ -199,9 +199,9 @@ object PipelineQueries extends QueryModule {
         .orderBy($"version", $"c_mktsegment")
     }),
 
-    // Manifest data skipping end to end: overwriteIndexed range-
+    // Manifest data skipping end to end: overwriteIndexedMulti range-
     // partitions orders on o_totalprice and records per-file
-    // (min, max) in the manifest; readRange then opens ONLY the
+    // (min, max) in the manifest; readWhere then opens ONLY the
     // overlapping files. The construction asserts the pruning
     // actually happened (kept < total files) — a silently-broken
     // stats writer would fail the build, and wrong pruning (a file
@@ -224,12 +224,13 @@ object PipelineQueries extends QueryModule {
         "/graft_txtable_idx_" + d.replaceAll("[^A-Za-z0-9]", "_") +
         "_" + src.count()
       if (TxTable.snapshot(s, dir).isEmpty)
-        TxTable.overwriteIndexed(src, dir, "o_totalprice")
+        TxTable.overwriteIndexedMulti(src, dir, Seq("o_totalprice"))
       val snap = TxTable.snapshot(s, dir).get
-      val kept = TxTable.pruneFiles(snap, "o_totalprice", 1000.0, 20000.0)
+      val range = Seq(("o_totalprice", 1000.0, 20000.0))
+      val kept = TxTable.pruneFilesWhere(s, dir, snap, range)
       require(kept.nonEmpty && kept.size < snap.files.size,
         s"manifest stats failed to prune: ${kept.size}/${snap.files.size}")
-      TxTable.readRange(s, dir, "o_totalprice", 1000.0, 20000.0)
+      TxTable.readWhere(s, dir, range)
         .groupBy($"o_orderpriority")
         .agg(count(lit(1)).as("n"), r4(sum($"o_totalprice")).as("total"))
         .orderBy($"o_orderpriority")
@@ -295,9 +296,9 @@ object PipelineQueries extends QueryModule {
       val ranges = Seq(("o_days", 1200.0, 1600.0),
         ("o_totalprice", 1000.0, 60000.0))
       val veq = Seq(("o_orderpriority", "1-URGENT"))
-      val both = TxTable.pruneFilesWhere(snap, ranges, veq)
-      val daysOnly = TxTable.pruneFilesWhere(snap, ranges.take(1))
-      val prioOnly = TxTable.pruneFilesWhere(snap, Nil, veq)
+      val both = TxTable.pruneFilesWhere(s, dir, snap, ranges, veq)
+      val daysOnly = TxTable.pruneFilesWhere(s, dir, snap, ranges.take(1))
+      val prioOnly = TxTable.pruneFilesWhere(s, dir, snap, Nil, veq)
       require(both.nonEmpty && both.size < snap.files.size &&
         both.size < math.max(daysOnly.size, prioOnly.size),
         s"two-column prune not stricter: both=${both.size} " +
@@ -360,12 +361,14 @@ object PipelineQueries extends QueryModule {
       val snap = TxTable.snapshot(s, dir).get
       val keys = Seq(7L, 1284L, 2341L, 4711L, 999999999L)
       keys.foreach { k =>
-        val kept = TxTable.pruneFilesPoint(snap, "o_orderkey", k.toString)
+        val kept = TxTable.pruneFilesWhere(s, dir, snap, Nil, Nil,
+          Seq("o_orderkey" -> Seq(k.toString)))
         require(kept.size < snap.files.size,
           s"bloom failed to prune key $k: ${kept.size}/${snap.files.size}")
       }
       // batched form: ONE scan over the union of admitted files
-      TxTable.readPoints(s, dir, "o_orderkey", keys.map(_.toString))
+      TxTable.readWhere(s, dir, Nil, Nil,
+        Seq("o_orderkey" -> keys.map(_.toString)))
         .select($"o_orderkey", $"o_orderpriority",
           r4($"o_totalprice").as("price"))
         .orderBy($"o_orderkey")
@@ -398,7 +401,7 @@ object PipelineQueries extends QueryModule {
           statCols = Seq("o_days", "o_totalprice"),
           valueCols = Seq("o_orderpriority"))
       val snap = TxTable.snapshot(s, dir).get
-      val kept = TxTable.pruneFilesWhere(snap,
+      val kept = TxTable.pruneFilesWhere(s, dir, snap,
         Seq(("o_days", 1200.0, 1600.0), ("o_totalprice", 1000.0, 60000.0)),
         Seq(("o_orderpriority", "2-HIGH")))
       require(kept.nonEmpty && kept.size < snap.files.size,
@@ -579,9 +582,9 @@ object PipelineQueries extends QueryModule {
       if (TxTable.snapshot(s, dir).isEmpty)
         TxTable.overwriteZordered(src, dir, "o_days", "o_totalprice")
       val snap = TxTable.snapshot(s, dir).get
-      val daysOnly = TxTable.pruneFilesWhere(snap,
+      val daysOnly = TxTable.pruneFilesWhere(s, dir, snap,
         Seq(("o_days", 1200.0, 1400.0)))
-      val priceOnly = TxTable.pruneFilesWhere(snap,
+      val priceOnly = TxTable.pruneFilesWhere(s, dir, snap,
         Seq(("o_totalprice", 1000.0, 30000.0)))
       require(daysOnly.size < snap.files.size &&
         priceOnly.size < snap.files.size,
@@ -1049,7 +1052,7 @@ object PipelineQueries extends QueryModule {
       val snap2 = TxTable.snapshot(s, dir).get
       val carried = snap1.files.toSet intersect snap2.files.toSet
       val expectUntouched = snap1.files.filter(f =>
-        snap1.fileValues.get(f).flatMap(_.get("pr"))
+        snap1.index.values.get(f).flatMap(_.get("pr"))
           .exists(vs => !vs("1-URGENT") && !vs("Z-BACKFILL")))
       require(expectUntouched.nonEmpty && expectUntouched.forall(carried),
         s"dynamic overwrite rewrote provably-untouched partitions: " +
@@ -1166,7 +1169,7 @@ object PipelineQueries extends QueryModule {
       val snap2 = TxTable.snapshot(s, dir).get
       val carried = snap1.files.toSet intersect snap2.files.toSet
       val expectUntouched = snap1.files.filter(f =>
-        snap1.fileValues.get(f).flatMap(_.get("days(ts)"))
+        snap1.index.values.get(f).flatMap(_.get("days(ts)"))
           .exists(vs => !days.exists(vs)))
       require(expectUntouched.nonEmpty && expectUntouched.forall(carried),
         s"days() overwrite rewrote provably-untouched days: " +

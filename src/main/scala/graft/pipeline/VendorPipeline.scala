@@ -471,7 +471,7 @@ object VendorPipeline extends QueryModule {
        |    GROUP BY vendor, split, rid)
        |  GROUP BY vendor)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  lazy val oracles: Map[String, String] = Map(
     "pipe_vendor" ->
       s"""WITH raw AS (
          |${rawUnion(narrowCols)}),

@@ -141,13 +141,7 @@ object IncrementalView {
             dstSnap.map(_.version + 1).getOrElse(1L),
             dstSnap.map(_.files).getOrElse(Nil),
             dstSnap.map(_.txns).getOrElse(Map.empty) + (appId -> srcHead),
-            dstSnap.flatMap(_.statsCol),
-            dstSnap.map(_.stats).getOrElse(Map.empty),
-            dstSnap.map(_.multiStats).getOrElse(Map.empty),
-            dstSnap.map(_.fileValues).getOrElse(Map.empty),
-            dstSnap.flatMap(_.bloomCol),
-            dstSnap.map(_.blooms).getOrElse(Map.empty),
-            op = "append")
+            dstSnap.map(_.index).getOrElse(FileIndex.empty), op = "append")
           return srcHead
         } catch {
           case _: TxTable.TxConflictException =>
@@ -160,12 +154,8 @@ object IncrementalView {
         // the view's own manifest (files without metadata fail open)
         val current: DataFrame = dstSnap match {
           case Some(snap) if snap.files.nonEmpty =>
-            val keySet = changedKeys.toSet
-            val keep = snap.files.filter(f =>
-              snap.fileValues.get(f).flatMap(_.get(keyCol)) match {
-                case Some(vs) => vs.exists(keySet)
-                case None => true
-              })
+            val keep = TxTable.pruneFilesWhere(spark, dst, snap, Nil, Nil,
+              Seq(keyCol -> changedKeys))
             if (keep.isEmpty)
               TxTable.read(spark, dst).filter(lit(false))
             else spark.read.parquet(
@@ -379,13 +369,7 @@ object IncrementalView {
             dstSnap.map(_.files).getOrElse(Nil),
             dstSnap.map(_.txns).getOrElse(Map.empty) +
               (markA -> headA) + (markB -> headB),
-            dstSnap.flatMap(_.statsCol),
-            dstSnap.map(_.stats).getOrElse(Map.empty),
-            dstSnap.map(_.multiStats).getOrElse(Map.empty),
-            dstSnap.map(_.fileValues).getOrElse(Map.empty),
-            dstSnap.flatMap(_.bloomCol),
-            dstSnap.map(_.blooms).getOrElse(Map.empty),
-            op = "append")
+            dstSnap.map(_.index).getOrElse(FileIndex.empty), op = "append")
           return (headA, headB)
         } catch {
           case _: TxTable.TxConflictException =>
@@ -400,12 +384,8 @@ object IncrementalView {
         // open)
         val current: DataFrame = dstSnap match {
           case Some(snap) if snap.files.nonEmpty =>
-            val gSet = changedGroups.toSet
-            val keep = snap.files.filter(f =>
-              snap.fileValues.get(f).flatMap(_.get(grpCol)) match {
-                case Some(vs) => vs.exists(gSet)
-                case None => true
-              })
+            val keep = TxTable.pruneFilesWhere(spark, dst, snap, Nil, Nil,
+              Seq(grpCol -> changedGroups))
             if (keep.isEmpty)
               TxTable.read(spark, dst).filter(lit(false))
             else spark.read.parquet(

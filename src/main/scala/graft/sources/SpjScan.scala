@@ -44,7 +44,7 @@ private[sources] object SpjScan {
   def bucketByName(snap: TxTable.Snapshot,
       t: TxTable.PartBucket): Option[Map[String, Int]] = {
     val entries = snap.files.map { f =>
-      snap.fileValues.get(f).flatMap(_.get(t.name)) match {
+      snap.index.values.get(f).flatMap(_.get(t.name)) match {
         case Some(vs) if vs.size == 1 => vs.head.toIntOption
           .map(b => f.split('/').last -> b)
         case _ => None

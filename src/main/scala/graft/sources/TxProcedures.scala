@@ -68,8 +68,7 @@ private[sources] object TxProcedures {
       out = StructType(Seq(StructField("version", LongType),
         StructField("op", StringType),
         StructField("n_files", LongType), StructField("n_txns", LongType),
-        StructField("stats_col", StringType),
-        StructField("multi_stat_cols", StringType),
+        StructField("stat_cols", StringType),
         StructField("bloom_col", StringType),
         StructField("n_change_files", LongType),
         StructField("commit_ts", LongType),
@@ -79,10 +78,9 @@ private[sources] object TxProcedures {
           new GenericInternalRow(Array[Any](
             r.getLong(0), UTF8String.fromString(r.getString(1)),
             r.getLong(2), r.getLong(3),
-            Option(r.getString(4)).map(UTF8String.fromString).orNull,
+            UTF8String.fromString(r.getString(4)),
             Option(r.getString(5)).map(UTF8String.fromString).orNull,
-            Option(r.getString(6)).map(UTF8String.fromString).orNull,
-            r.getLong(7), r.getLong(8), r.getLong(9)))
+            r.getLong(6), r.getLong(7), r.getLong(8)))
         }
       })
     // DESCRIBE DETAIL analog: one row of table-level operational

@@ -94,12 +94,9 @@ private[sources] class TxRowLevelOperation(spark: SparkSession,
         // cond arrives with LOGICAL names (the plan schema), and the
         // manifest's prune metadata is keyed logical — no translation
         val (ranges, valueEq) = TxSql.filterPrunes(cond.toSeq)
-        val keepNames =
-          TxSql.candidateNamesPruned(snap, ranges, valueEq, schema)
-        candidates = snap.files.filter(f => keepNames(f.split('/').last))
-        val restricted = TxTable.Snapshot(snap.version, candidates,
-          snap.txns, snap.statsCol, snap.stats, snap.multiStats,
-          snap.fileValues, snap.bloomCol, snap.blooms)
+        candidates = snap.index.candidates(snap.files, ranges, valueEq, Nil,
+          schema)
+        val restricted = snap.copy(files = candidates)
         // on a column-mapped table the parquet reader gets the
         // PHYSICAL schema; the scan's declared output maps back to
         // logical (rows are positional — names never touch the data)
@@ -232,15 +229,7 @@ private[sources] class TxReplaceBatchWrite(path: String, schema: StructType,
     // verbs' pruned copy-on-write; rewritten files lose theirs
     // (absent metadata -> always a candidate -> correct, unpruned)
     TxTable.commit(spark, path, snap.version + 1, untouched ++ files,
-      snap.txns,
-      snap.statsCol.filter(_ =>
-        snap.stats.exists { case (f, _) => untouched.contains(f) }),
-      snap.stats.filter { case (f, _) => untouched.contains(f) },
-      snap.multiStats.filter { case (f, _) => untouched.contains(f) },
-      snap.fileValues.filter { case (f, _) => untouched.contains(f) },
-      snap.bloomCol.filter(_ =>
-        snap.blooms.exists { case (f, _) => untouched.contains(f) }),
-      snap.blooms.filter { case (f, _) => untouched.contains(f) },
+      snap.txns, snap.index.restrictTo(untouched.toSet),
       op = op, changes = changes,
       // replaced files' dels fold into the rewrite (the op scan served
       // visible rows); untouched files keep theirs

@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate,
 import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.sources.{DataSourceRegister, InsertableRelation}
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, NumericType, ShortType, StringType, StructType}
+import org.apache.spark.sql.types.{NumericType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import scala.jdk.CollectionConverters._
@@ -454,61 +454,6 @@ object TxSql {
         hi.get(c).map(hourStr).getOrElse("9999-12-31 23:00:00"))
     }
   }
-
-  /** The file names (data/<name> relative form) surviving every
-    * manifest prune for the given Catalyst filters — the single
-    * pruning decision [[TxFileIndex]] and the specs share. String
-    * equalities probe the bloom index directly (the stored canonical
-    * form of a string column IS the string). Numeric
-    * point-equalities (lo == hi ranges) probe it only when the bloom
-    * column's SCHEMA type is integral and the literal is whole —
-    * the one case where the probe's string form provably equals the
-    * index's `cast(col as string)` canonical key (float/double
-    * formatting can diverge from a literal's toString, and a wrong
-    * probe is a wrong-results prune, so those fail open). */
-  private[sources] def candidateNames(snap: TxTable.Snapshot,
-      filters: Seq[Expression], schema: StructType): Set[String] = {
-    val (ranges, valueEq) = toManifestPredicates(filters)
-    candidateNamesPruned(snap, ranges, valueEq, schema)
-  }
-
-  /** [[candidateNames]] from already-translated manifest predicates —
-    * shared with the row-level-operation scan, whose predicates
-    * arrive as DSv2 source filters ([[filterPrunes]]) rather than
-    * Catalyst expressions. */
-  private[sources] def candidateNamesPruned(snap: TxTable.Snapshot,
-      ranges: Seq[(String, Double, Double)],
-      valueEq: Seq[(String, String)], schema: StructType): Set[String] = {
-    val viaStats = TxTable.pruneFilesWhere(snap, ranges, valueEq).toSet
-    val viaBloom = snap.bloomCol match {
-      case Some(bc) =>
-        val integral = schema.find(_.name == bc).exists(f =>
-          f.dataType == ByteType || f.dataType == ShortType ||
-            f.dataType == IntegerType || f.dataType == LongType)
-        // Probe only when the Double round-trip is provably lossless:
-        // |lo| STRICTLY below 2^53. Ranges arrive Double-rounded from
-        // toManifestPredicates, so a long literal above 2^53 (xxhash64
-        // / snowflake ids) has ALREADY lost bits — its probe string
-        // would not equal the bloom's cast(col as string) key and the
-        // file holding the real row would be wrongly pruned. The bound
-        // is strict because 2^53 itself is ambiguous: both 2^53 and
-        // 2^53+1 round to the same Double. Fail open (no probe)
-        // instead; the min/max range prune still applies.
-        val numProbes =
-          if (!integral) Nil
-          else ranges.collect {
-            case (c, lo, hi) if c == bc && lo == hi && lo.isWhole &&
-              math.abs(lo) < (1L << 53).toDouble =>
-              lo.toLong.toString
-          }
-        val probes =
-          valueEq.collect { case (c, v) if c == bc => v } ++ numProbes
-        if (probes.isEmpty) snap.files.toSet
-        else TxTable.pruneFilesPoints(snap, bc, probes).toSet
-      case None => snap.files.toSet
-    }
-    (viaStats intersect viaBloom).map(f => f.split('/').last)
-  }
 }
 
 /** Manifest-pruning file index over one pinned snapshot: the listing
@@ -516,7 +461,7 @@ object TxSql {
   * the listing, the lakehouse O(1)-metadata property), and
   * `listFiles` drops every file the manifest metadata can prove
   * holds no matching row. */
-private[sources] class TxFileIndex(spark: SparkSession, table: String,
+private[graft] class TxFileIndex(spark: SparkSession, table: String,
     snap: TxTable.Snapshot, tableSchema: StructType,
     nameToLogical: String => String = identity,
     logicalSchema: Option[StructType] = None)
@@ -526,7 +471,7 @@ private[sources] class TxFileIndex(spark: SparkSession, table: String,
 
   /** Files surviving the last `listFiles` prune — observable so specs
     * can assert the SQL path prunes exactly as `readWhere` does. */
-  @volatile private[sources] var lastCandidates: Option[Set[String]] = None
+  @volatile private[graft] var lastCandidates: Option[Set[String]] = None
 
   /** The zone the table's temporal value sets were recorded under —
     * read once per index; the derived prune below is sound only when
@@ -557,10 +502,10 @@ private[sources] class TxFileIndex(spark: SparkSession, table: String,
     // manifest's stats/value sets/bloom column are keyed LOGICAL —
     // map the predicate names back before consulting the manifest
     val (ranges0, valueEq0) = TxSql.toManifestPredicates(dataFilters)
-    val keep0 = TxSql.candidateNamesPruned(snap,
+    val keep0 = snap.index.candidates(snap.files,
       ranges0.map { case (n, lo, hi) => (nameToLogical(n), lo, hi) },
-      valueEq0.map { case (n, v) => (nameToLogical(n), v) },
-      logicalSchema.getOrElse(tableSchema))
+      valueEq0.map { case (n, v) => (nameToLogical(n), v) }, Nil,
+      logicalSchema.getOrElse(tableSchema)).map(_.split('/').last).toSet
     // generated-partition-filter derivation: a plain timestamp/date
     // range prunes against days()/months()/hours() value sets — only
     // when the WRITER-recorded zone and the reader session are both
@@ -596,18 +541,18 @@ private[sources] class TxFileIndex(spark: SparkSession, table: String,
           // bounds' 4-char prefix gives the inclusive year window
           val loYear = loDay.take(5) + "01-01"
           val hiYear = hiDay.take(5) + "01-01"
-          snap.fileValues.get(f).flatMap(_.get(s"days($lc)")).forall(
+          snap.index.values.get(f).flatMap(_.get(s"days($lc)")).forall(
             _.exists(d => d >= loDay && d <= hiDay)) &&
-            snap.fileValues.get(f).flatMap(_.get(s"months($lc)")).forall(
+            snap.index.values.get(f).flatMap(_.get(s"months($lc)")).forall(
               _.exists(m => m >= loMonth && m <= hiMonth)) &&
-            snap.fileValues.get(f).flatMap(_.get(s"years($lc)")).forall(
+            snap.index.values.get(f).flatMap(_.get(s"years($lc)")).forall(
               _.exists(y => y >= loYear && y <= hiYear))
         } && hourPrunes.forall { case (c, loHour, hiHour) =>
           val lc = nameToLogical(c)
-          snap.fileValues.get(f).flatMap(_.get(s"hours($lc)")).forall(
+          snap.index.values.get(f).flatMap(_.get(s"hours($lc)")).forall(
             _.exists(h => h >= loHour && h <= hiHour))
         } && truncPrunes.forall { case (lc, v) =>
-          snap.fileValues.get(f).forall(_.forall {
+          snap.index.values.get(f).forall(_.forall {
             case (entry, vs) => TxTable.PartTransform.parse(entry) match {
               case TxTable.PartTruncate(w, c0) if c0 == lc =>
                 // probe prefix must be CODE-POINT-aware to match the

@@ -38,15 +38,11 @@ object TxTable {
 
   /** One resolved manifest. `txns` carries the last applied epoch
     * per streaming writer id (the Delta txn-action analog, the
-    * exactly-once key for [[appendEpoch]]); `statsCol`/`stats` carry
-    * optional per-file (min, max) of ONE indexed column, written by
-    * [[overwriteIndexed]] and consumed by [[readRange]]'s file
-    * pruning. `multiStats` generalizes to per-file (min, max) over k
-    * NUMERIC columns and `fileValues` to per-file bounded
-    * distinct-value sets of low-cardinality partition columns — the
-    * Iceberg-style manifest metadata [[overwriteIndexedMulti]] writes
-    * and [[readWhere]] prunes with. All empty for manifests that
-    * never set them — old manifests parse unchanged. `op` names the
+    * exactly-once key for [[appendEpoch]]); `index` is the per-file
+    * skipping metadata (min/max stats, value sets, bloom — see
+    * [[FileIndex]]) that the indexed writers record and every reader
+    * prunes with through [[pruneFilesWhere]]; empty for manifests
+    * that never set it. `op` names the
     * commit's operation (append / overwrite / delete / update / merge
     * / cdc / compact / restore / create; "write" for pre-label
     * manifests) — the provenance row [[history]] surfaces and the
@@ -62,12 +58,7 @@ object TxTable {
     * takes the NEWEST version at-or-before the target. */
   case class Snapshot(version: Long, files: Seq[String],
       txns: Map[String, Long] = Map.empty,
-      statsCol: Option[String] = None,
-      stats: Map[String, (Double, Double)] = Map.empty,
-      multiStats: Map[String, Map[String, (Double, Double)]] = Map.empty,
-      fileValues: Map[String, Map[String, Set[String]]] = Map.empty,
-      bloomCol: Option[String] = None,
-      blooms: Map[String, Array[Byte]] = Map.empty,
+      index: FileIndex = FileIndex.empty,
       op: String = "write",
       changes: Seq[String] = Nil,
       ts: Long = 0L,
@@ -105,28 +96,10 @@ object TxTable {
     require(ins.forall(_._2.nonEmpty),
       s"deletion entry for $path carries an empty IN-set")
     /** The DELETED-rows predicate — exactly the conjunctive Column the
-      * copy-on-write verbs test, so DV and rewrite agree row-for-row.
-      * `ins` compares the column's CANONICAL STRING form (the same
-      * `cast(col as string)` that derived the recorded values), so
-      * equality is exact by construction — no coercion ambiguity.
-      * Built as ONE `InSet` node (set payload) rather than
-      * `isin(v1..vk)`: a merge batch's key set can be 100k values,
-      * and an In expression with 100k literal CHILDREN costs every
-      * analyzer/optimizer tree walk O(k) per rule — measured 22 s of
-      * pure plan time for a 24k-key merge's read-back before this. */
-    def predicate: org.apache.spark.sql.Column = {
-      import org.apache.spark.sql.catalyst.expressions.{Cast, InSet}
-      import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-      import org.apache.spark.sql.types.StringType
-      val base = predicateColumn(ranges, eqs)
-      ins.foldLeft(base) { case (acc, (c0, vs)) =>
-        acc && org.apache.spark.sql.GraftColumnBridge.column(
-          InSet(Cast(UnresolvedAttribute.quoted(c0), StringType),
-            vs.iterator.map(v =>
-              org.apache.spark.unsafe.types.UTF8String.fromString(v)
-                : Any).toSet))
-      }
-    }
+      * copy-on-write verbs and [[readWhere]] test, so DV and rewrite
+      * agree row-for-row. */
+    def predicate: org.apache.spark.sql.Column =
+      predicateColumn(ranges, eqs, ins)
   }
 
   /** `acc` with `entries`' deletion predicates applied — the single
@@ -375,8 +348,7 @@ object TxTable {
   private def parseManifest(table: String, v: Long,
       body: String): Snapshot = {
     // commit body: {"version":N,"files":[...],"txns":{...},
-    //   "statscol":"c","stats":[{"path":..,"min":..,"max":..}],
-    //   "mstats":[{"path":..,"cols":{c:[mn,mx],..},"vals":{c:[..],..}}]}
+    //   "mstats":[...],"blooms":{...}} (index fields: FileIndex.json)
     // parsed with the strict JSON walk (graft.Json) — the manifest is
     // machine-written by commit(), so a parse failure means a corrupt
     // log, and the error should say so rather than regex-skip it.
@@ -400,62 +372,6 @@ object TxTable {
         .map { case (k, x) => k -> asDouble(x).toLong }
       case _ => Map.empty[String, Long]
     }
-    val statsCol = root.get("statscol").collect { case s: String => s }
-    val stats = root.get("stats") match {
-      case Some(l: List[_]) => l.collect { case m: Map[_, _] =>
-        val e = m.asInstanceOf[Map[String, Any]]
-        e("path").asInstanceOf[String] ->
-          (asDouble(e("min")), asDouble(e("max")))
-      }.toMap
-      case _ => Map.empty[String, (Double, Double)]
-    }
-    val (mstats, fvals) = root.get("mstats") match {
-      case Some(l: List[_]) =>
-        val entries = l.collect { case m: Map[_, _] =>
-          m.asInstanceOf[Map[String, Any]]
-        }
-        val ms = entries.map { e =>
-          val cols = e.get("cols") match {
-            case Some(c: Map[_, _]) => c.asInstanceOf[Map[String, Any]]
-              .map { case (k, x) =>
-                val List(mn, mx) = x.asInstanceOf[List[Any]]
-                k -> (asDouble(mn), asDouble(mx))
-              }
-            case _ => Map.empty[String, (Double, Double)]
-          }
-          e("path").asInstanceOf[String] -> cols
-        }.toMap
-        val fv = entries.map { e =>
-          val vals = e.get("vals") match {
-            case Some(c: Map[_, _]) => c.asInstanceOf[Map[String, Any]]
-              .map { case (k, x) =>
-                k -> x.asInstanceOf[List[Any]]
-                  .collect { case s: String => s }.toSet
-              }
-            case _ => Map.empty[String, Set[String]]
-          }
-          e("path").asInstanceOf[String] -> vals
-        }.toMap
-        (ms, fv)
-      case _ => (Map.empty[String, Map[String, (Double, Double)]],
-        Map.empty[String, Map[String, Set[String]]])
-    }
-    val (bloomCol, blooms) = root.get("blooms") match {
-      case Some(m: Map[_, _]) =>
-        val o = m.asInstanceOf[Map[String, Any]]
-        val bc = o.get("col").collect { case s: String => s }
-        val bs = o.get("files") match {
-          case Some(l: List[_]) => l.collect { case e: Map[_, _] =>
-            val em = e.asInstanceOf[Map[String, Any]]
-            em("path").asInstanceOf[String] ->
-              java.util.Base64.getDecoder.decode(
-                em("b64").asInstanceOf[String])
-          }.toMap
-          case _ => Map.empty[String, Array[Byte]]
-        }
-        (bc, bs)
-      case _ => (None, Map.empty[String, Array[Byte]])
-    }
     val op = root.get("op").collect { case s: String => s }
       .getOrElse("write")
     val changes = root.get("cdc") match {
@@ -463,8 +379,8 @@ object TxTable {
       case _ => Nil
     }
     val ts = root.get("ts").collect { case l: Long => l }.getOrElse(0L)
-    Snapshot(v, files, txns, statsCol, stats, mstats, fvals,
-      bloomCol, blooms, op, changes, ts, parseDels(root))
+    Snapshot(v, files, txns, FileIndex.parse(root, asDouble), op, changes,
+      ts, parseDels(root))
   }
 
   /** Highest manifest reader-feature level this build understands.
@@ -789,7 +705,7 @@ object TxTable {
     */
   /** JSON string escape for manifest bodies — partition VALUES are
     * data-derived, so quotes/backslashes/control chars must encode. */
-  private def jq(s: String): String = "\"" + s.flatMap {
+  private[sources] def jq(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
@@ -799,12 +715,7 @@ object TxTable {
   private[graft] def commit(spark: SparkSession, table: String,
       version: Long, files: Seq[String],
       txns: Map[String, Long] = Map.empty,
-      statsCol: Option[String] = None,
-      stats: Map[String, (Double, Double)] = Map.empty,
-      multiStats: Map[String, Map[String, (Double, Double)]] = Map.empty,
-      fileValues: Map[String, Map[String, Set[String]]] = Map.empty,
-      bloomCol: Option[String] = None,
-      blooms: Map[String, Array[Byte]] = Map.empty,
+      index: FileIndex = FileIndex.empty,
       op: String = "write",
       changes: Seq[String] = Nil,
       dels: Seq[DelEntry] = Nil): Unit = {
@@ -825,38 +736,6 @@ object TxTable {
       else txns.toSeq.sorted
         .map { case (a, e) => "\"" + a + "\":" + e }
         .mkString(",\"txns\":{", ",", "}")
-    val statsJson = statsCol match {
-      case Some(c) if stats.nonEmpty =>
-        ",\"statscol\":\"" + c + "\",\"stats\":[" +
-          stats.toSeq.sortBy(_._1).map { case (pth, (mn, mx)) =>
-            "{\"path\":\"" + pth + "\",\"min\":" + mn + ",\"max\":" + mx + "}"
-          }.mkString(",") + "]"
-      case _ => ""
-    }
-    val mstatsJson =
-      if (multiStats.isEmpty && fileValues.isEmpty) ""
-      else {
-        val paths = (multiStats.keySet ++ fileValues.keySet).toSeq.sorted
-        ",\"mstats\":[" + paths.map { pth =>
-          val cols = multiStats.getOrElse(pth, Map.empty).toSeq.sortBy(_._1)
-            .map { case (c, (mn, mx)) => jq(c) + s":[$mn,$mx]" }
-            .mkString("{", ",", "}")
-          val vals = fileValues.getOrElse(pth, Map.empty).toSeq.sortBy(_._1)
-            .map { case (c, vs) =>
-              jq(c) + ":[" + vs.toSeq.sorted.map(jq).mkString(",") + "]"
-            }.mkString("{", ",", "}")
-          s"""{"path":${jq(pth)},"cols":$cols,"vals":$vals}"""
-        }.mkString(",") + "]"
-      }
-    val bloomsJson = bloomCol match {
-      case Some(bc) if blooms.nonEmpty =>
-        ",\"blooms\":{\"col\":" + jq(bc) + ",\"files\":[" +
-          blooms.toSeq.sortBy(_._1).map { case (pth, bytes) =>
-            s"""{"path":${jq(pth)},"b64":"""" +
-              java.util.Base64.getEncoder.encodeToString(bytes) + "\"}"
-          }.mkString(",") + "]}"
-      case _ => ""
-    }
     // entries sharing a predicate body serialize ONCE with a "paths"
     // list (a merge's IN-set touches many files — repeating a 100k-key
     // list per file would multiply the manifest by the candidate
@@ -883,7 +762,7 @@ object TxTable {
           s"""{"paths":[$paths],"r":$r,"e":$e$i}"""
         }.mkString(",") + "]"
     val body =
-      s"""{"version":$version,"files":[$filesJson]$opJson$tsJson$changesJson$txnsJson$statsJson$mstatsJson$bloomsJson$delsJson}"""
+      s"""{"version":$version,"files":[$filesJson]$opJson$tsJson$changesJson$txnsJson${index.json}$delsJson}"""
     val target = new Path(ld, s"v$version.json")
     val protocol = CommitProtocol.forScheme(f.getScheme)
     if (!protocol.publish(f, target, body.getBytes("UTF-8")))
@@ -1039,23 +918,7 @@ object TxTable {
     try out.write(ColumnMapping.toJson(m1).getBytes("UTF-8"))
     finally out.close()
     def rk(n: String): Option[String] = rekey.getOrElse(n, Some(n))
-    // value-set keys may be transform names ("days(ts)") — rekey the
-    // INNER column so a renamed partition column keeps pruning
-    def rkEntry(e: String): Option[String] = PartTransform.parse(e) match {
-      case PartIdentity(cn) => rk(cn)
-      case PartDays(cn) => rk(cn).map(n => s"days($n)")
-      case PartMonths(cn) => rk(cn).map(n => s"months($n)")
-      case PartHours(cn) => rk(cn).map(n => s"hours($n)")
-      case PartYears(cn) => rk(cn).map(n => s"years($n)")
-      case PartBucket(nb, cn) => rk(cn).map(n => s"bucket($nb,$n)")
-      case PartTruncate(w, cn) => rk(cn).map(n => s"truncate($w,$n)")
-    }
-    val ms2 = cur.multiStats.map { case (file, cols) =>
-      file -> cols.flatMap { case (k, v) => rk(k).map(_ -> v) } }
-    val fv2 = cur.fileValues.map { case (file, cols) =>
-      file -> cols.flatMap { case (k, v) => rkEntry(k).map(_ -> v) } }
-    val statsCol2 = cur.statsCol.flatMap(rk)
-    val bloomCol2 = cur.bloomCol.flatMap(rk)
+    def rkEntry(e: String): Option[String] = PartTransform.rename(e, rk)
     // deletion predicates rekey with the rename (dropColumn refuses
     // while a del references the column, so rk always resolves here).
     // Dotted entries (old manifests only — new DV commits refuse
@@ -1070,10 +933,7 @@ object TxTable {
         d.ins.map { case (c, vs) => (re(c), vs) })
     }
     try commit(spark, table, next, cur.files, cur.txns,
-      statsCol2, if (statsCol2.isDefined) cur.stats else Map.empty,
-      ms2, fv2,
-      bloomCol2, if (bloomCol2.isDefined) cur.blooms else Map.empty,
-      op = "alter_mapping", dels = dels2)
+      cur.index.renameColumns(rk), op = "alter_mapping", dels = dels2)
     catch { case e: Throwable =>
       f.delete(mappingPath(table, next), false); throw e
     }
@@ -1199,8 +1059,6 @@ object TxTable {
       s"clone target $dst already exists")
     def abs(f: String): String = new Path(src, f).toString
     val files = snap.files.map(abs)
-    def rekey[V](m: Map[String, V]): Map[String, V] =
-      m.map { case (k, v) => abs(k) -> v }
     // sidecars snapshot BEFORE the commit so the first reader of v1
     // already sees the full logical surface
     declaredSchema(spark, src).foreach(declareSchema(spark, dst, _))
@@ -1222,9 +1080,7 @@ object TxTable {
       try out.write(ColumnMapping.toJson(m).getBytes("UTF-8"))
       finally out.close()
     }
-    commit(spark, dst, 1L, files, Map.empty,
-      snap.statsCol, rekey(snap.stats), rekey(snap.multiStats),
-      rekey(snap.fileValues), snap.bloomCol, rekey(snap.blooms),
+    commit(spark, dst, 1L, files, Map.empty, snap.index.rekeyFiles(abs),
       op = "clone",
       // deletion predicates follow their files (absolute references)
       dels = snap.dels.map(d => d.copy(path = abs(d.path))))
@@ -1518,11 +1374,7 @@ object TxTable {
     val files = writeFiles(df, table, next)
     commit(spark, table, next, cur.map(_.files).getOrElse(Nil) ++ files,
       cur.map(_.txns).getOrElse(Map.empty),
-      cur.flatMap(_.statsCol), cur.map(_.stats).getOrElse(Map.empty),
-      cur.map(_.multiStats).getOrElse(Map.empty),
-      cur.map(_.fileValues).getOrElse(Map.empty),
-      cur.flatMap(_.bloomCol), cur.map(_.blooms).getOrElse(Map.empty),
-      op = "append",
+      cur.map(_.index).getOrElse(FileIndex.empty), op = "append",
       // deletion predicates carry VERBATIM: the old files they hide
       // rows of are still live — dropping them here would resurrect
       dels = cur.map(_.dels).getOrElse(Nil))
@@ -2022,7 +1874,7 @@ object TxTable {
     import org.apache.spark.sql.functions.col
     if (cur.files.isEmpty) return None
     val keyType = changes.schema.fields.find(_.name == key).map(_.dataType)
-    if (!keyType.exists(dvMergeKeyLossless)) return None
+    if (!keyType.exists(FileIndex.canonicalLossless)) return None
     val keysRaw = changes.filter(col(key).isNotNull)
       .select(col(key).cast("string")).distinct()
       .limit(DvMergeMaxKeys + 1)
@@ -2031,22 +1883,15 @@ object TxTable {
     requireDvColumns(spark, table, cur, Seq(key))
     val next = cur.version + 1
     val keys = keysRaw.sorted.toSeq
+    val ins = Seq(key -> keys)
     val touched =
-      if (keys.isEmpty) Nil
-      else candidateFilesForKeys(cur, key, keys, keyType)
+      if (keys.isEmpty) Nil else pruneFilesWhere(spark, table, cur, Nil, Nil, ins)
     val changeFiles = cdcChangeFiles(spark, table, Some(cur), changes,
       key, opCol, next)
     val upserts = changes.filter(col(opCol) =!= "d").drop(opCol)
     val fresh = writeFilesDispatch(upserts, table, next)
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
-    val (freshMs, freshFv) =
-      recomputeMetadata(spark, table, fresh, statCols, valueCols)
-    val ins = Seq(key -> keys)
     commit(spark, table, next, cur.files ++ fresh, cur.txns,
-      cur.statsCol, cur.stats,
-      cur.multiStats ++ freshMs, cur.fileValues ++ freshFv,
-      cur.bloomCol, cur.blooms,
+      cur.index ++ reindex(spark, table, cur.index, fresh),
       op = "cdc", changes = changeFiles,
       dels = cur.dels ++ (if (keys.isEmpty) Nil
         else touched.map(f => DelEntry(f, Nil, Nil, ins))))
@@ -2079,10 +1924,7 @@ object TxTable {
         // described files remain live, new files are simply unindexed
         commit(spark, table, next,
           cur.map(_.files).getOrElse(Nil) ++ files, txns,
-          cur.flatMap(_.statsCol), cur.map(_.stats).getOrElse(Map.empty),
-          cur.map(_.multiStats).getOrElse(Map.empty),
-          cur.map(_.fileValues).getOrElse(Map.empty),
-          cur.flatMap(_.bloomCol), cur.map(_.blooms).getOrElse(Map.empty),
+          cur.map(_.index).getOrElse(FileIndex.empty),
           op = "append", dels = cur.map(_.dels).getOrElse(Nil))
         return true
       } catch {
@@ -2098,12 +1940,6 @@ object TxTable {
     false // unreachable
   }
 
-  /** Overwrite with per-file (min, max) stats of `col` in the
-    * manifest: rows are range-partitioned on `col` first so files
-    * hold disjoint ranges, then one bounded pass over the fresh
-    * files records each file's span — manifest-level data skipping,
-    * the Delta/Iceberg scan-pruning mechanism. [[readRange]] uses
-    * the stats to open only overlapping files. */
   /** Index/layout metadata is TOP-LEVEL-column only (the manifest's
     * stats/value-set/bloom language keys on flat names; a nested path
     * would record under a name no reader's prune translation ever
@@ -2119,122 +1955,47 @@ object TxTable {
         "promote the field to a column first)")
   }
 
-  def overwriteIndexed(df: DataFrame, table: String, col: String): Long = {
-    import org.apache.spark.sql.functions.{col => c, input_file_name, max => fmax, min => fmin}
-    requireTopLevel(df, Seq(col), "overwriteIndexed")
+  /** The shared body of the indexed writers: `layout` clusters `df`
+    * into `n` partitions (so each file is tight in the indexed
+    * columns), the files write, `index` records their metadata from
+    * the WRITTEN files, and one overwrite commit publishes both. The
+    * partition count is explicit: an AQE-coalesced exchange can
+    * collapse a small table to ONE file, which defeats the index. */
+  private def overwriteIndexedWith(df: DataFrame, table: String,
+      cols: Seq[String], what: String)(layout: (DataFrame, Int) => DataFrame)(
+      index: Seq[String] => FileIndex): Long = {
+    requireTopLevel(df, cols, what)
     val spark = df.sparkSession
     val cur = snapshot(spark, table)
     val next = cur.map(_.version + 1).getOrElse(1L)
-    // explicit partition count: an AQE-coalesced range exchange can
-    // collapse a small table to ONE file, which defeats the stats
-    val nParts = math.max(2,
-      spark.sessionState.conf.numShufflePartitions)
-    val files = writeFiles(df.repartitionByRange(nParts, c(col)), table, next)
-    val byName = files.map(f => f.split('/').last -> f).toMap
-    val stats = toLogicalFrame(
-      spark.read.parquet(files.map(new Path(table, _).toString): _*),
-      mappingAt(spark, table))
-      .groupBy(input_file_name().as("__f"))
-      .agg(fmin(c(col)).as("__mn"), fmax(c(col)).as("__mx"))
-      .collect()
-      .flatMap { r =>
-        val name = r.getString(0).split('/').last
-        byName.get(name).map(f =>
-          f -> (r.get(1).toString.toDouble, r.get(2).toString.toDouble))
-      }.toMap
-    commit(spark, table, next, files,
-      cur.map(_.txns).getOrElse(Map.empty), Some(col), stats,
-      op = "overwrite")
+    val nParts = math.max(2, spark.sessionState.conf.numShufflePartitions)
+    val files = writeFiles(layout(df, nParts), table, next)
+    commit(spark, table, next, files, cur.map(_.txns).getOrElse(Map.empty),
+      index(files), op = "overwrite")
     next
   }
 
-  /** The files of `snap` that can contain `col` ∈ [lo, hi]: a file
-    * whose recorded span misses the range entirely is skipped; files
-    * without stats (or a different indexed column) are kept — pruning
-    * is an optimization, never a filter. */
-  def pruneFiles(snap: Snapshot, col: String, lo: Double,
-      hi: Double): Seq[String] =
-    if (!snap.statsCol.contains(col)) snap.files
-    else snap.files.filter(f => snap.stats.get(f) match {
-      case Some((mn, mx)) => mx >= lo && mn <= hi
-      case None => true
-    })
-
-  /** Range read through manifest stats: opens only files overlapping
-    * [lo, hi], then applies the exact filter (stats prune files, the
-    * predicate prunes rows). */
-  def readRange(spark: SparkSession, table: String, col: String,
-      lo: Double, hi: Double, asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col => c}
-    val snap = snapshot(spark, table, asOf).getOrElse(
-      throw new IllegalArgumentException(s"no committed version at $table"))
-    val keep = pruneFiles(snap, col, lo, hi)
-    if (keep.isEmpty)
-      return read(spark, table, asOf).filter(c(col) >= lo && c(col) <= hi)
-        .filter(org.apache.spark.sql.functions.lit(false))
-    readFilesDv(spark, table, snap, keep,
-      mappingAt(spark, table, Some(snap.version)))
-      .filter(c(col) >= lo && c(col) <= hi)
-  }
-
-  /** Overwrite with per-file manifest metadata over MANY columns:
-    * (min, max) for each of `statCols` (numeric) and a bounded
-    * distinct-value set for each of `valueCols` (low-cardinality
+  /** Overwrite with per-file manifest metadata over one or more
+    * columns: (min, max) for each of `statCols` (numeric) and a
+    * bounded distinct-value set for each of `valueCols` (low-cardinality
     * partition-style strings; files exceeding `maxValuesPerFile`
     * distinct values record nothing and are never pruned on that
-    * column). Rows are clustered `valueCols` first, then range on
+    * column). Rows are range-clustered `valueCols` first, then on
     * `statCols`, so each file is tight in every recorded dimension —
-    * the Iceberg manifest-pruning layout. [[readWhere]] consumes it:
-    * a conjunctive predicate over k columns opens only files no
+    * the Delta/Iceberg manifest-pruning layout. [[readWhere]] consumes
+    * it: a conjunctive predicate over k columns opens only files no
     * single column can rule out, strictly fewer than any one-column
     * index when the predicates are independent. */
   def overwriteIndexedMulti(df: DataFrame, table: String,
       statCols: Seq[String], valueCols: Seq[String] = Nil,
       maxValuesPerFile: Int = 16): Long = {
-    import org.apache.spark.sql.functions.{col => c, collect_set, input_file_name, max => fmax, min => fmin}
+    import org.apache.spark.sql.functions.col
     require(statCols.nonEmpty || valueCols.nonEmpty)
-    requireTopLevel(df, statCols ++ valueCols, "overwriteIndexedMulti")
-    val spark = df.sparkSession
-    val cur = snapshot(spark, table)
-    val next = cur.map(_.version + 1).getOrElse(1L)
-    val nParts = math.max(2,
-      spark.sessionState.conf.numShufflePartitions)
-    val cluster = (valueCols ++ statCols).map(c)
-    val files = writeFiles(
-      df.repartitionByRange(nParts, cluster: _*), table, next)
-    val byName = files.map(f => f.split('/').last -> f).toMap
-    val aggs =
-      statCols.flatMap(s => Seq(
-        fmin(c(s)).cast("double").as(s"__mn_$s"),
-        fmax(c(s)).cast("double").as(s"__mx_$s"))) ++
-      valueCols.map(v =>
-        collect_set(c(v).cast("string")).as(s"__vs_$v"))
-    val rows = toLogicalFrame(
-      spark.read.parquet(files.map(new Path(table, _).toString): _*),
-      mappingAt(spark, table))
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val mstats = rows.flatMap { r =>
-      val name = r.getString(0).split('/').last
-      byName.get(name).map { f =>
-        f -> statCols.map(s =>
-          s -> (r.getAs[Double](s"__mn_$s"), r.getAs[Double](s"__mx_$s"))).toMap
-      }
-    }.toMap
-    val fvals = rows.flatMap { r =>
-      val name = r.getString(0).split('/').last
-      byName.get(name).map { f =>
-        f -> valueCols.flatMap { v =>
-          val vs = r.getAs[scala.collection.Seq[String]](s"__vs_$v").toSet
-          if (vs.size <= maxValuesPerFile) Some(v -> vs) else None
-        }.toMap
-      }
-    }.toMap
-    commit(spark, table, next, files,
-      cur.map(_.txns).getOrElse(Map.empty),
-      multiStats = mstats, fileValues = fvals, op = "overwrite")
-    next
+    overwriteIndexedWith(df, table, statCols ++ valueCols,
+      "overwriteIndexedMulti")(
+      (d, n) => d.repartitionByRange(n, (valueCols ++ statCols).map(col): _*))(
+      files => recomputeMetadata(df.sparkSession, table, files, statCols,
+        valueCols, maxValuesPerFile))
   }
 
   /** DYNAMIC PARTITION OVERWRITE: atomically replace exactly the
@@ -2343,7 +2104,7 @@ object TxTable {
     val freshDf = () => toLogicalFrame(
       spark.read.parquet(fresh.map(new Path(table, _).toString): _*),
       dynMapping)
-    // canonical string form per transform — the fileValues language.
+    // canonical string form per transform — the value-set language.
     // Join/struct field names are index-keyed (__k0, __k1) so
     // transform names with parentheses never meet the column parser.
     val keyCols = transforms.zipWithIndex.map { case (t, i) =>
@@ -2372,22 +2133,15 @@ object TxTable {
     // per-transform incoming value sets — the conjunctive prune language
     val incomingByCol: Seq[Set[String]] =
       transforms.indices.map(i => incoming.map(_(i)).toSet)
-    val statCols = cur.map(_.multiStats.values.flatMap(_.keys).toSeq
-      .distinct.sorted).getOrElse(Nil)
-    val valueCols = (cur.map(_.fileValues.values.flatMap(_.keys).toSeq)
-      .getOrElse(Nil) ++ transforms.map(_.name)).distinct.sorted
+    val idx = cur.map(_.index).getOrElse(FileIndex.empty)
     // a file provably holds NO incoming tuple when SOME transform's
-    // recorded value set misses EVERY tuple's value for that key;
-    // tuple-level precision would need per-file tuple sets — the
-    // per-key test is conservative (more rewrite, never wrong)
-    val touched = cur.map(_.files.filter { f =>
-      !transforms.indices.exists { i =>
-        cur.get.fileValues.get(f).flatMap(_.get(transforms(i).name)) match {
-          case Some(vs) => !vs.exists(incomingByCol(i))
-          case None => false // no metadata → cannot exclude
-        }
-      }
-    }).getOrElse(Nil)
+    // recorded value set misses EVERY tuple's value for that key — the
+    // per-key IN-sets, conjunctive; tuple-level precision would need
+    // per-file tuple sets, so this is conservative (more rewrite,
+    // never wrong)
+    val touched = cur.map(c => pruneFilesWhere(spark, table, c, Nil, Nil,
+      transforms.indices.map(i => transforms(i).name -> incomingByCol(i).toSeq)))
+      .getOrElse(Nil)
     val untouched = cur.map(_.files.filterNot(touched.toSet)).getOrElse(Nil)
     // tuple-EXACT row routing via a broadcast join on the canonical
     // strings (an OR-of-ANDs literal expression would grow with the
@@ -2431,60 +2185,26 @@ object TxTable {
         withKeys(touchedDf())
           .join(tupleDf, joinKeys, "left_anti")
           .drop(joinKeys: _*), table, next)
-    // single-column stats + bloom metadata carry over on untouched
-    // files and refresh on rewritten+fresh ones — copyOnWrite's
-    // discipline (judge r15 ADVICE: dropping them here silently
-    // disabled point-lookup/range pruning after one dynamic
-    // overwrite on an indexed table). The statsCol rides the SAME
-    // recomputeMetadata scan as the multi-column stats (one pass over
-    // the rewritten+fresh files, r16 ADVICE) and is subtracted from
-    // the multiStats result unless it was already a tracked column.
-    val scOpt = cur.flatMap(_.statsCol)
-    val statColsAll = (statCols ++ scOpt).distinct.sorted
-    val (msAll, fv) = recomputeMetadata(spark, table, remainder ++ fresh,
-      statColsAll, valueCols)
-    val ms = scOpt match {
-      case Some(sc) if !statCols.contains(sc) =>
-        msAll.map { case (f, cols) => f -> (cols - sc) }
-      case _ => msAll
-    }
+    // untouched files keep their index entries (blooms included);
+    // rewritten + fresh files get stats and value sets recomputed over
+    // the tracked columns plus the partition transforms, in one scan
+    // (they lose their blooms: absent → never pruned → still correct)
     val untouchedSet = untouched.toSet
-    val singleStats: Map[String, (Double, Double)] = scOpt match {
-      case Some(sc) =>
-        cur.map(_.stats.filter { case (f, _) => untouchedSet(f) })
-          .getOrElse(Map.empty) ++
-          msAll.flatMap { case (f, m) => m.get(sc).map(f -> _) }
-      case None => Map.empty
-    }
-    // rewritten/fresh files have no bloom (absent → never pruned →
-    // still correct); untouched files keep theirs
-    val keptBlooms = cur.map(_.blooms.filter {
-      case (f, _) => untouchedSet(f) }).getOrElse(Map.empty)
     commit(spark, table, next, untouched ++ remainder ++ fresh,
       cur.map(_.txns).getOrElse(Map.empty) ++ addTxns,
-      cur.flatMap(_.statsCol).filter(_ => singleStats.nonEmpty),
-      singleStats,
-      multiStats = cur.map(_.multiStats.filter {
-        case (f, _) => untouchedSet(f) }).getOrElse(Map.empty) ++ ms,
-      fileValues = cur.map(_.fileValues.filter {
-        case (f, _) => untouchedSet(f) }).getOrElse(Map.empty) ++ fv,
-      bloomCol = cur.flatMap(_.bloomCol).filter(_ => keptBlooms.nonEmpty),
-      blooms = keptBlooms,
+      idx.restrictTo(untouchedSet) ++ reindex(spark, table, idx,
+        remainder ++ fresh, transforms.map(_.name)),
       op = "overwrite_partitions", changes = changeFiles,
       dels = cur.map(_.dels.filter(d => untouchedSet(d.path)))
         .getOrElse(Nil))
     next
   }
 
-  /** Append clustered on a declared partition column, recording
+  /** Append clustered on the declared partition transforms, recording
     * per-file value sets for the NEW files (existing metadata carries
     * forward like any append) — the insert path for SQL-partitioned
     * tables, so appended files stay prunable by the next dynamic
-    * overwrite and by `readWhere` on the partition column. */
-  def appendPartitioned(df: DataFrame, table: String,
-      partCol: String): Long =
-    appendPartitionedMulti(df, table, Seq(partCol))
-
+    * overwrite and by [[readWhere]] on the partition columns. */
   def appendPartitionedMulti(df: DataFrame, table: String,
       partCols: Seq[String]): Long = {
     val spark = df.sparkSession
@@ -2500,14 +2220,10 @@ object TxTable {
         df.repartitionByRange(nParts, transforms.map(_.expr): _*),
         table, next)
     }
-    val (_, fv) = recomputeMetadata(spark, table, files, Nil,
-      transforms.map(_.name))
     commit(spark, table, next, cur.map(_.files).getOrElse(Nil) ++ files,
       cur.map(_.txns).getOrElse(Map.empty),
-      cur.flatMap(_.statsCol), cur.map(_.stats).getOrElse(Map.empty),
-      cur.map(_.multiStats).getOrElse(Map.empty),
-      cur.map(_.fileValues).getOrElse(Map.empty) ++ fv,
-      cur.flatMap(_.bloomCol), cur.map(_.blooms).getOrElse(Map.empty),
+      cur.map(_.index).getOrElse(FileIndex.empty) ++
+        recomputeMetadata(spark, table, files, Nil, transforms.map(_.name)),
       op = "append", dels = cur.map(_.dels).getOrElse(Nil))
     next
   }
@@ -2529,11 +2245,7 @@ object TxTable {
       val txns = cur.map(_.txns).getOrElse(Map.empty) + (appId -> epochId)
       try {
         commit(spark, table, next, cur.map(_.files).getOrElse(Nil) ++ files,
-          txns,
-          cur.flatMap(_.statsCol), cur.map(_.stats).getOrElse(Map.empty),
-          cur.map(_.multiStats).getOrElse(Map.empty),
-          cur.map(_.fileValues).getOrElse(Map.empty),
-          cur.flatMap(_.bloomCol), cur.map(_.blooms).getOrElse(Map.empty),
+          txns, cur.map(_.index).getOrElse(FileIndex.empty),
           op = "append", dels = cur.map(_.dels).getOrElse(Nil))
         return true
       } catch {
@@ -2639,14 +2351,8 @@ object TxTable {
         "(the one-bucket-per-file layout is table-wide)")
     // source columns must exist as top-level logical columns
     val logicals: Set[String] = declaredSchema(spark, table)
-      .map(_.fieldNames.toSet)
-      .orElse(cur.files.headOption.flatMap { f =>
-        try {
-          val raw = spark.read.parquet(new Path(table, f).toString).schema
-          Some(mappingAt(spark, table, Some(cur.version))
-            .fold(raw)(_.logicalize(raw)).fieldNames.toSet)
-        } catch { case _: Exception => None }
-      }).getOrElse(Set.empty)
+      .orElse(footerSchema(spark, table, cur))
+      .map(_.fieldNames.toSet).getOrElse(Set.empty)
     if (logicals.nonEmpty) transforms.map(_.col).foreach(c =>
       require(logicals.contains(c),
         s"cannot evolve partitioning at $table: source column '$c' " +
@@ -2775,19 +2481,23 @@ object TxTable {
     def name: String
     def col: String
     def expr: org.apache.spark.sql.Column
+    def withCol(c: String): PartTransform
   }
   final case class PartIdentity(col: String) extends PartTransform {
+    def withCol(c: String): PartTransform = copy(col = c)
     val name: String = col
     def expr: org.apache.spark.sql.Column =
       org.apache.spark.sql.functions.col(col).cast("string")
   }
   final case class PartDays(col: String) extends PartTransform {
+    def withCol(c: String): PartTransform = copy(col = c)
     val name: String = s"days($col)"
     def expr: org.apache.spark.sql.Column =
       org.apache.spark.sql.functions.to_date(
         org.apache.spark.sql.functions.col(col)).cast("string")
   }
   final case class PartMonths(col: String) extends PartTransform {
+    def withCol(c: String): PartTransform = copy(col = c)
     val name: String = s"months($col)"
     def expr: org.apache.spark.sql.Column =
       org.apache.spark.sql.functions.date_trunc("month",
@@ -2795,6 +2505,7 @@ object TxTable {
         .cast("date").cast("string")
   }
   final case class PartHours(col: String) extends PartTransform {
+    def withCol(c: String): PartTransform = copy(col = c)
     val name: String = s"hours($col)"
     def expr: org.apache.spark.sql.Column =
       org.apache.spark.sql.functions.date_trunc("hour",
@@ -2806,6 +2517,7 @@ object TxTable {
     * stays chronological and the generated-filter derivation is the
     * day bounds' 4-char prefix. */
   final case class PartYears(col: String) extends PartTransform {
+    def withCol(c: String): PartTransform = copy(col = c)
     val name: String = s"years($col)"
     def expr: org.apache.spark.sql.Column =
       org.apache.spark.sql.functions.date_trunc("year",
@@ -2822,6 +2534,7 @@ object TxTable {
     * SQL surface therefore admits truncate on STRING columns only;
     * the API accepts what the caller declares. */
   final case class PartTruncate(w: Int, col: String) extends PartTransform {
+    def withCol(c: String): PartTransform = copy(col = c)
     require(w >= 1, s"truncate($w, $col): width must be positive")
     val name: String = s"truncate($w,$col)"
     def expr: org.apache.spark.sql.Column =
@@ -2837,6 +2550,7 @@ object TxTable {
     * join). Derivation matches [[TxPartitionFunctions.Bucket]]
     * exactly — manifest values and the catalog function must agree. */
   final case class PartBucket(n: Int, col: String) extends PartTransform {
+    def withCol(c: String): PartTransform = copy(col = c)
     require(n >= 1, s"bucket($n, $col): n must be positive")
     val name: String = s"bucket($n,$col)"
     def expr: org.apache.spark.sql.Column = {
@@ -2863,6 +2577,13 @@ object TxTable {
       case Truncate(w, c) => PartTruncate(w.toInt, c)
       case c => PartIdentity(c)
     }
+
+    /** `entry` with its source column renamed through `rk` (None = the
+      * column is gone, so is the entry). */
+    def rename(entry: String, rk: String => Option[String]): Option[String] = {
+      val t = parse(entry)
+      rk(t.col).map(t.withCol(_).name)
+    }
   }
 
   /** Overwrite with a PER-FILE BLOOM FILTER over a high-cardinality
@@ -2872,26 +2593,17 @@ object TxTable {
     * exactly ONE file; a point lookup then opens that file plus the
     * fpp share of false-positive files, instead of every file a
     * min/max range would admit. Keys are hashed in their canonical
-    * STRING form, so [[readPoint]] works for integral and string
-    * columns alike; NULL keys are never indexed (a point lookup never
-    * matches NULL). Bloom bytes ride the manifest: ~1.2 bytes/key at
-    * fpp 1%, bounded by rows — at 100 TB shard the key space over
-    * more files, each bloom stays row-bounded. */
+    * STRING form, so [[readWhere]]'s equalities and IN-sets probe it
+    * for integral and string columns alike; NULL keys are never
+    * indexed (a point lookup never matches NULL). Bloom bytes ride
+    * the manifest: ~1.2 bytes/key at fpp 1%, bounded by rows — at
+    * 100 TB shard the key space over more files, each bloom stays
+    * row-bounded. */
   def overwriteIndexedBloom(df: DataFrame, table: String, col: String,
-      fpp: Double = 0.01): Long = {
-    import org.apache.spark.sql.functions.{col => c, input_file_name}
-    requireTopLevel(df, Seq(col), "overwriteIndexedBloom")
-    val spark = df.sparkSession
-    val cur = snapshot(spark, table)
-    val next = cur.map(_.version + 1).getOrElse(1L)
-    val nParts = math.max(2, spark.sessionState.conf.numShufflePartitions)
-    val files = writeFiles(df.repartition(nParts, c(col)), table, next)
-    val blooms = buildBlooms(spark, table, files, col, fpp)
-    commit(spark, table, next, files,
-      cur.map(_.txns).getOrElse(Map.empty),
-      bloomCol = Some(col), blooms = blooms, op = "overwrite")
-    next
-  }
+      fpp: Double = 0.01): Long =
+    overwriteIndexedWith(df, table, Seq(col), "overwriteIndexedBloom")(
+      (d, n) => d.repartition(n, d(col)))(files => FileIndex(
+      bloom = Some(col -> buildBlooms(df.sparkSession, table, files, col, fpp))))
 
   /** Per-file bloom filters over `col` for freshly written `files` —
     * shared by [[overwriteIndexedBloom]] and [[compact]]'s index
@@ -2927,64 +2639,6 @@ object TxTable {
     }.toMap
   }
 
-  /** Files of `snap` that MAY hold `col = value` per the per-file
-    * bloom filters: a negative bloom is definitive (skip the file),
-    * a positive may be false (the exact predicate still applies).
-    * Files without a bloom — or a different indexed column — are
-    * kept: pruning is an optimization, never a filter. */
-  def pruneFilesPoint(snap: Snapshot, col: String,
-      value: String): Seq[String] = pruneFilesPoints(snap, col, Seq(value))
-
-  /** Batched form: files that MAY hold `col = v` for ANY of `values`.
-    * Each file's bloom deserializes ONCE and is probed with all k
-    * values — O(files) deserializations for a k-key batch, not
-    * O(k × files). */
-  def pruneFilesPoints(snap: Snapshot, col: String,
-      values: Seq[String]): Seq[String] =
-    if (!snap.bloomCol.contains(col)) snap.files
-    else snap.files.filter(f => snap.blooms.get(f) match {
-      case Some(bytes) =>
-        val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(bytes))
-        values.exists(bf.mightContainString)
-      case None => true
-    })
-
-  /** Point lookup through the bloom index: opens only files whose
-    * bloom admits the key (typically ONE at fpp 1%), then applies the
-    * exact equality — the entity-retrieval read path. The value
-    * compares in canonical string form, matching the index. */
-  def readPoint(spark: SparkSession, table: String, col: String,
-      value: String, asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col => c, lit}
-    val snap = snapshot(spark, table, asOf).getOrElse(
-      throw new IllegalArgumentException(s"no committed version at $table"))
-    val keep = pruneFilesPoint(snap, col, value)
-    if (keep.isEmpty)
-      read(spark, table, asOf).filter(lit(false))
-    else
-      readFilesDv(spark, table, snap, keep,
-        mappingAt(spark, table, Some(snap.version)))
-        .filter(c(col).cast("string") === value)
-  }
-
-  /** Batched point lookup: ONE scan over the union of files any
-    * requested key's bloom admits, with an IN filter — k keys cost
-    * one job and O(k) files, not k jobs ([[readPoint]] per key). */
-  def readPoints(spark: SparkSession, table: String, col: String,
-      values: Seq[String], asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col => c, lit}
-    require(values.nonEmpty)
-    val snap = snapshot(spark, table, asOf).getOrElse(
-      throw new IllegalArgumentException(s"no committed version at $table"))
-    val keep = pruneFilesPoints(snap, col, values)
-    val pred = c(col).cast("string").isin(values: _*)
-    if (keep.isEmpty) read(spark, table, asOf).filter(lit(false))
-    else readFilesDv(spark, table, snap, keep,
-      mappingAt(spark, table, Some(snap.version)))
-      .filter(pred)
-  }
-
   /** Overwrite with a Z-ORDER (Morton-curve) layout over two numeric
     * columns, per-file (min, max) for BOTH recorded in the manifest —
     * lakehouse OPTIMIZE ZORDER as a TxTable commit. Where
@@ -2996,157 +2650,117 @@ object TxTable {
     * query families at 100 TB. Same cost shape as every layout op:
     * one range exchange at write time. */
   def overwriteZordered(df: DataFrame, table: String,
-      colA: String, colB: String): Long = {
-    import org.apache.spark.sql.functions.{col => c}
-    requireTopLevel(df, Seq(colA, colB), "overwriteZordered")
-    val spark = df.sparkSession
-    val cur = snapshot(spark, table)
-    val next = cur.map(_.version + 1).getOrElse(1L)
-    val nParts = math.max(2, spark.sessionState.conf.numShufflePartitions)
+      colA: String, colB: String): Long =
+    overwriteIndexedWith(df, table, Seq(colA, colB), "overwriteZordered")(
+      (d, n) => zordered(d, n, colA, colB))(files =>
+      recomputeMetadata(df.sparkSession, table, files, Seq(colA, colB), Nil))
+
+  /** `df` range-clustered into `n` partitions along the Morton curve
+    * of (colA, colB), sorted within each. */
+  private def zordered(df: DataFrame, n: Int, colA: String,
+      colB: String): DataFrame = {
     val (zdf, helpers, z) = Layout.withMortonCode(df, colA, colB)
-    val files = writeFiles(
-      zdf.repartitionByRange(nParts, c(z))
-        .sortWithinPartitions(c(z))
-        .drop(helpers: _*), table, next)
-    val (ms, _) = recomputeMetadata(spark, table, files, Seq(colA, colB), Nil)
-    commit(spark, table, next, files,
-      cur.map(_.txns).getOrElse(Map.empty), multiStats = ms,
-      op = "overwrite")
-    next
+    zdf.repartitionByRange(n, zdf(z)).sortWithinPartitions(z)
+      .drop(helpers: _*)
   }
 
-  /** Conjunctive predicate push-down through the multi-column
-    * manifest: numeric range predicates `(col, lo, hi)` plus string
-    * equality predicates `(col, value)`. A file is skipped when ANY
-    * predicate's recorded metadata excludes it; files without
-    * metadata for a column are kept — pruning is an optimization,
-    * never a filter. */
-  def pruneFilesWhere(snap: Snapshot,
+  /** The files of `snap` that MAY hold a row matching the conjunctive
+    * predicate — every range AND every equality AND every IN-set (the
+    * [[DelEntry]] language, see [[FileIndex.candidates]]). The one
+    * file-skipping decision: [[readWhere]], the copy-on-write and
+    * merge-on-read DML verbs, dynamic overwrite and the SQL scans
+    * (through the same [[FileIndex]]) all prune with it, so they skip
+    * exactly the same files. Files without metadata for a predicate's
+    * column are kept — pruning is an optimization, never a filter.
+    * The column types the canonical probe forms need come from one
+    * parquet footer, read only when the index has metadata that needs
+    * them. */
+  def pruneFilesWhere(spark: SparkSession, table: String, snap: Snapshot,
       ranges: Seq[(String, Double, Double)],
-      valueEq: Seq[(String, String)] = Nil): Seq[String] =
-    snap.files.filter { f =>
-      val cols = snap.multiStats.getOrElse(f, Map.empty)
-      val vals = snap.fileValues.getOrElse(f, Map.empty)
-      ranges.forall { case (col, lo, hi) =>
-        cols.get(col).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      } && valueEq.forall { case (col, v) =>
-        vals.get(col).forall(_.contains(v))
-      }
-    }
+      eqs: Seq[(String, String)] = Nil,
+      ins: Seq[(String, Seq[String])] = Nil): Seq[String] =
+    snap.index.candidates(snap.files, ranges, eqs, ins,
+      footerSchema(spark, table, snap)
+        .getOrElse(new org.apache.spark.sql.types.StructType()))
 
-  /** Canonicalize valueEq probe values to the string form the
-    * manifest stores — `cast(col as string)` of the column's OWN type
-    * (schema read from one parquet footer). A probe "3" against a
-    * double column becomes "3.0", matching the recorded value sets,
-    * so the prune agrees with the type-coercing exact predicate
-    * instead of silently skipping files it shouldn't. Unparseable
-    * probes pass through raw: the stored sets can't contain them and
-    * the coerced exact predicate matches no row either, so pruning
-    * and predicate still agree. Any schema/cast fault falls back to
-    * the raw value (pruning is an optimization, never a filter —
-    * fail-open means keep MORE files, never fewer than correct). */
-  private def canonicalValueEq(spark: SparkSession, table: String,
-      snap: Snapshot,
-      valueEq: Seq[(String, String)]): Seq[(String, String)] = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
-    import org.apache.spark.sql.types.StringType
-    if (valueEq.isEmpty || snap.fileValues.isEmpty || snap.files.isEmpty)
-      return valueEq
-    val schema = // footer names are physical; probes are logical
+  /** The snapshot's LOGICAL schema from its first file's parquet footer
+    * (footer names are physical; the mapping at the snapshot's version
+    * translates). None for an empty snapshot or on any read fault. */
+  private def footerSchema(spark: SparkSession, table: String,
+      snap: Snapshot): Option[org.apache.spark.sql.types.StructType] =
+    snap.files.headOption.flatMap { f =>
       try {
-        val raw =
-          spark.read.parquet(new Path(table, snap.files.head).toString).schema
-        mappingAt(spark, table, Some(snap.version)).fold(raw)(_.logicalize(raw))
-      } catch { case _: Exception => return valueEq }
-    valueEq.map { case (col, v) =>
-      schema.find(_.name == col) match {
-        case Some(f) if f.dataType != StringType =>
-          val canon =
-            try Cast(
-              Cast(Literal(
-                org.apache.spark.unsafe.types.UTF8String.fromString(v),
-                StringType), f.dataType, Some("UTC"), EvalMode.LEGACY),
-              StringType, Some("UTC"), EvalMode.LEGACY).eval()
-            catch { case _: Exception => null }
-          col -> (if (canon == null) v else canon.toString)
-        case _ => (col, v)
-      }
+        val raw = spark.read.parquet(new Path(table, f).toString).schema
+        Some(mappingAt(spark, table, Some(snap.version))
+          .fold(raw)(_.logicalize(raw)))
+      } catch { case _: Exception => None }
     }
-  }
 
-  /** Read through multi-column manifest pruning, then apply the exact
-    * predicates (metadata prunes files, the predicate prunes rows). */
+  /** Read through the manifest prune ([[pruneFilesWhere]]), then apply
+    * the exact predicate (metadata prunes files, the predicate prunes
+    * rows). `ins` compares each column's canonical string form. */
   def readWhere(spark: SparkSession, table: String,
       ranges: Seq[(String, Double, Double)],
-      valueEq: Seq[(String, String)] = Nil,
+      eqs: Seq[(String, String)] = Nil,
+      ins: Seq[(String, Seq[String])] = Nil,
       asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col => c, lit}
+    import org.apache.spark.sql.functions.lit
     val snap = snapshot(spark, table, asOf).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $table"))
-    val keep =
-      pruneFilesWhere(snap, ranges, canonicalValueEq(spark, table, snap, valueEq))
-    val exact = (df: DataFrame) => {
-      val p1 = ranges.foldLeft(lit(true)) { case (acc, (col, lo, hi)) =>
-        acc && c(col) >= lo && c(col) <= hi
-      }
-      val p2 = valueEq.foldLeft(p1) { case (acc, (col, v)) =>
-        acc && c(col) === v
-      }
-      df.filter(p2)
-    }
+    val keep = pruneFilesWhere(spark, table, snap, ranges, eqs, ins)
+    val exact = predicateColumn(ranges, eqs, ins)
     if (keep.isEmpty)
-      exact(read(spark, table, asOf)).filter(lit(false))
+      read(spark, table, asOf).filter(exact).filter(lit(false))
     else
-      exact(readFilesDv(spark, table, snap, keep,
-        mappingAt(spark, table, Some(snap.version))))
+      readFilesDv(spark, table, snap, keep,
+        mappingAt(spark, table, Some(snap.version))).filter(exact)
   }
 
-  /** The conjunctive predicate (ranges AND equalities) as a Column —
-    * the same predicate language the manifest metadata can prune on,
-    * which is exactly why [[deleteWhere]]/[[updateWhere]] accept it
-    * instead of an arbitrary Column: a predicate the manifest can
-    * reason about is a predicate whose copy-on-write can SKIP files. */
+  /** The conjunctive predicate (ranges AND equalities AND IN-sets) as a
+    * Column — the same predicate language the manifest metadata can
+    * prune on, which is exactly why [[deleteWhere]]/[[updateWhere]]
+    * accept it instead of an arbitrary Column: a predicate the
+    * manifest can reason about is a predicate whose copy-on-write can
+    * SKIP files. `ins` compares the column's CANONICAL STRING form
+    * (the same `cast(col as string)` that derived the recorded
+    * values), so equality is exact by construction — no coercion
+    * ambiguity. Each IN-set is ONE `InSet` node (set payload) rather
+    * than `isin(v1..vk)`: a merge batch's key set can be 100k values,
+    * and an In expression with 100k literal CHILDREN costs every
+    * analyzer/optimizer tree walk O(k) per rule — measured 22 s of
+    * pure plan time for a 24k-key merge's read-back before this. */
   private def predicateColumn(ranges: Seq[(String, Double, Double)],
-      valueEq: Seq[(String, String)]): org.apache.spark.sql.Column = {
+      eqs: Seq[(String, String)],
+      ins: Seq[(String, Seq[String])] = Nil): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, InSet}
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.functions.{col => c, lit}
+    import org.apache.spark.sql.types.StringType
     (ranges.map { case (col, lo, hi) => c(col) >= lo && c(col) <= hi } ++
-      valueEq.map { case (col, v) => c(col) === v })
-      .reduceOption(_ && _).getOrElse(lit(true))
+      eqs.map { case (col, v) => c(col) === v } ++
+      ins.map { case (col, vs) =>
+        org.apache.spark.sql.GraftColumnBridge.column(
+          InSet(Cast(UnresolvedAttribute.quoted(col), StringType),
+            vs.iterator.map(v =>
+              org.apache.spark.unsafe.types.UTF8String.fromString(v)
+                : Any).toSet))
+      }).reduceOption(_ && _).getOrElse(lit(true))
   }
 
-  /** Files of `snap` that MAY hold rows matching the conjunctive
-    * predicate, consulting BOTH metadata forms (the single
-    * [[overwriteIndexed]] column and the [[overwriteIndexedMulti]]
-    * per-file stats/value sets). Files without metadata are always
-    * candidates — pruning is an optimization, never a filter. */
-  private def candidateFiles(snap: Snapshot,
-      ranges: Seq[(String, Double, Double)],
-      valueEq: Seq[(String, String)]): Seq[String] = {
-    val viaMulti = pruneFilesWhere(snap, ranges, valueEq).toSet
-    val viaSingle = snap.statsCol match {
-      case Some(sc) => ranges.find(_._1 == sc) match {
-        case Some((c, lo, hi)) => pruneFiles(snap, c, lo, hi).toSet
-        case None => snap.files.toSet
-      }
-      case None => snap.files.toSet
-    }
-    snap.files.filter(f => viaMulti(f) && viaSingle(f))
-  }
-
-  /** Recompute per-file manifest metadata for freshly written files,
-    * over the same columns the previous snapshot tracked — so a
-    * delete/update rewrite keeps the table's data-skipping index
-    * alive (Delta's OPTIMIZE/DML recompute stats the same way).
-    * Value sets above `maxValuesPerFile` distinct values record
-    * nothing for that (file, column). */
+  /** Per-file manifest metadata for freshly written files: (min, max)
+    * of each of `statCols` and the value set of each of `valueCols`
+    * (plain columns or partition transforms) — so a rewrite keeps the
+    * table's data-skipping index alive over the columns the previous
+    * snapshot tracked (Delta's OPTIMIZE/DML recompute stats the same
+    * way). Value sets above `maxValuesPerFile` distinct values record
+    * nothing for that (file, column). One aggregation over the files;
+    * no job when there is nothing to record. */
   private def recomputeMetadata(spark: SparkSession, table: String,
       files: Seq[String], statCols: Seq[String], valueCols: Seq[String],
-      maxValuesPerFile: Int = 16):
-      (Map[String, Map[String, (Double, Double)]],
-        Map[String, Map[String, Set[String]]]) = {
+      maxValuesPerFile: Int = 16): FileIndex = {
     import org.apache.spark.sql.functions.{col => c, collect_set, input_file_name, max => fmax, min => fmin}
     if (files.isEmpty || (statCols.isEmpty && valueCols.isEmpty))
-      return (Map.empty, Map.empty)
+      return FileIndex.empty
     val byName = files.map(f => f.split('/').last -> f).toMap
     val aggs =
       statCols.flatMap(s => Seq(
@@ -3154,7 +2768,7 @@ object TxTable {
         fmax(c(s)).cast("double").as(s"__mx_$s"))) ++
       // value entries may be transforms ("days(ts)"): the recorded
       // set is the transform's derived canonical strings; plain
-      // column names parse to identity (= the previous cast)
+      // column names parse to identity (`cast(col as string)`)
       valueCols.map(v =>
         collect_set(PartTransform.parse(v).expr).as(s"__vs_$v"))
     val rows = toLogicalFrame(
@@ -3163,22 +2777,27 @@ object TxTable {
       .groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
-    val ms = rows.flatMap { r =>
-      byName.get(r.getString(0).split('/').last).map { f =>
+      .flatMap(r => byName.get(r.getString(0).split('/').last).map(_ -> r))
+    FileIndex(
+      stats = rows.map { case (f, r) =>
         f -> statCols.map(s =>
           s -> (r.getAs[Double](s"__mn_$s"), r.getAs[Double](s"__mx_$s"))).toMap
-      }
-    }.toMap
-    val fv = rows.flatMap { r =>
-      byName.get(r.getString(0).split('/').last).map { f =>
+      }.toMap,
+      values = rows.map { case (f, r) =>
         f -> valueCols.flatMap { v =>
           val vs = r.getAs[scala.collection.Seq[String]](s"__vs_$v").toSet
           if (vs.size <= maxValuesPerFile) Some(v -> vs) else None
         }.toMap
-      }
-    }.toMap
-    (ms, fv)
+      }.toMap)
   }
+
+  /** [[recomputeMetadata]] for freshly written `files` over the columns
+    * `like` tracks (plus `moreValueCols`) — what every rewrite adds to
+    * the carried index, so it survives DML and maintenance. */
+  private def reindex(spark: SparkSession, table: String, like: FileIndex,
+      files: Seq[String], moreValueCols: Seq[String] = Nil): FileIndex =
+    recomputeMetadata(spark, table, files, like.statCols,
+      (like.valueCols ++ moreValueCols).distinct.sorted)
 
   /** Shared copy-on-write DML core: files the manifest metadata can
     * prove hold NO matching row carry over into the next version
@@ -3197,10 +2816,7 @@ object TxTable {
     val cur = snapshot(spark, table).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $table"))
     val next = cur.version + 1
-    // prune with CANONICAL probe values (see canonicalValueEq): a
-    // wrong prune here would silently skip rows the DML should touch
-    val touched =
-      candidateFiles(cur, ranges, canonicalValueEq(spark, table, cur, valueEq))
+    val touched = pruneFilesWhere(spark, table, cur, ranges, valueEq)
     val untouched = cur.files.filterNot(touched.toSet)
     // change feed (opt-in): `changeRows` maps the TOUCHED-files frame
     // to the version's row-level delta (+ _change_type) — the same
@@ -3219,25 +2835,12 @@ object TxTable {
     val rewritten: Seq[String] =
       if (touched.isEmpty) Nil
       else writeFiles(rewrite(touchedDf()), table, next)
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
-    val (newMs, newFv) =
-      recomputeMetadata(spark, table, rewritten, statCols, valueCols)
-    val singleStats: Map[String, (Double, Double)] = cur.statsCol match {
-      case Some(sc) =>
-        val (ms, _) = recomputeMetadata(spark, table, rewritten, Seq(sc), Nil)
-        cur.stats.filter { case (f, _) => untouched.contains(f) } ++
-          ms.flatMap { case (f, m) => m.get(sc).map(f -> _) }
-      case None => Map.empty
-    }
-    // blooms carry over on untouched files; rewritten files lose
-    // theirs (absent bloom → never pruned → still correct)
-    val keptBlooms = cur.blooms.filter { case (f, _) => untouched.contains(f) }
+    // untouched files keep their index entries; rewritten files get
+    // stats and value sets recomputed over the same columns (and lose
+    // their blooms: absent → never pruned → still correct)
     commit(spark, table, next, untouched ++ rewritten, cur.txns,
-      cur.statsCol.filter(_ => singleStats.nonEmpty), singleStats,
-      cur.multiStats.filter { case (f, _) => untouched.contains(f) } ++ newMs,
-      cur.fileValues.filter { case (f, _) => untouched.contains(f) } ++ newFv,
-      cur.bloomCol.filter(_ => keptBlooms.nonEmpty), keptBlooms,
+      cur.index.restrictTo(untouched.toSet) ++
+        reindex(spark, table, cur.index, rewritten),
       op = op, changes = changeFiles,
       // rewritten files folded their dels in (touchedDf applied them);
       // untouched files keep theirs
@@ -3304,16 +2907,8 @@ object TxTable {
         s"${nested.mkString(", ")} — DV predicates record top-level " +
         "columns only; use copy-on-write (a table without " +
         "enableDeletionVectors) for nested-field DML")
-    val schemaOpt: Option[org.apache.spark.sql.types.StructType] =
-      declaredSchema(spark, table).orElse(cur.files.headOption.flatMap { f =>
-        try {
-          val raw =
-            spark.read.parquet(new Path(table, f).toString).schema
-          Some(mappingAt(spark, table, Some(cur.version))
-            .fold(raw)(_.logicalize(raw)))
-        } catch { case _: Exception => None }
-      })
-    schemaOpt.foreach { sch =>
+    declaredSchema(spark, table).orElse(footerSchema(spark, table, cur))
+      .foreach { sch =>
       val missing = cols.filterNot(sch.fieldNames.contains)
       require(missing.isEmpty,
         s"DV DML references nonexistent column(s) at $table: " +
@@ -3332,76 +2927,6 @@ object TxTable {
     * for that regime; this manifest's predicate form serves the
     * point-to-moderate-batch upsert that motivates DVs. */
   private[graft] val DvMergeMaxKeys: Int = 100000
-
-  /** Key types whose canonical string form (`cast(col as string)`)
-    * round-trips EXACTLY — the predicate-losslessness gate for
-    * [[mergeDvCounted]]'s IN-set entries, the same discipline as
-    * [[TxSql.filterLossless]]: float/double (NaN, -0.0), timestamp
-    * (session-zone rendering) and binary keys fall back to
-    * copy-on-write rather than risk a drifted replay. */
-  private def dvMergeKeyLossless(
-      dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-    case org.apache.spark.sql.types.ByteType |
-        org.apache.spark.sql.types.ShortType |
-        org.apache.spark.sql.types.IntegerType |
-        org.apache.spark.sql.types.LongType |
-        org.apache.spark.sql.types.StringType |
-        org.apache.spark.sql.types.DateType => true
-    case _ => false
-  }
-
-  /** Files of `snap` that MAY hold any of `keys` (canonical string
-    * form) in `col` — the IN-set analog of [[candidateFiles]],
-    * consulting per-file (min,max) stats (ONLY when the key column is
-    * integral — recorded stats are `min/max(col).cast("double")`, so a
-    * string key's stats are lexicographic-then-cast artifacts: {"9",
-    * "10"} records the inverted interval (10.0, 9.0) and non-numeric
-    * strings record (0.0, 0.0) via null-unboxing, either of which
-    * would falsely prune a file that holds the key; string/date keys
-    * rely on value sets and blooms instead), recorded value sets, and
-    * bloom filters. Files without metadata are always candidates —
-    * pruning is an optimization, never a filter. Driver cost is
-    * O(files × log keys + bloom probes), the same manifest-sized
-    * class as every prune here. */
-  private def candidateFilesForKeys(snap: Snapshot, col: String,
-      keys: Seq[String],
-      keyType: Option[org.apache.spark.sql.types.DataType]): Seq[String] = {
-    import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
-    val keySet = keys.toSet
-    val statsSound = keyType.exists {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    val numeric: Option[Array[Double]] = {
-      val ds = keys.flatMap(_.toDoubleOption)
-      if (statsSound && ds.length == keys.length) Some(ds.toArray.sorted)
-      else None
-    }
-    def admits(mn: Double, mx: Double): Boolean = numeric match {
-      case Some(arr) =>
-        val i = java.util.Arrays.binarySearch(arr, mn)
-        val at = if (i >= 0) i else -i - 1
-        at < arr.length && arr(at) <= mx
-      case None => true
-    }
-    lazy val bloomed: Map[String, org.apache.spark.util.sketch.BloomFilter] =
-      if (!snap.bloomCol.contains(col)) Map.empty
-      else snap.blooms.map { case (f, bytes) =>
-        f -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(bytes))
-      }
-    snap.files.filter { f =>
-      val multiOk = snap.multiStats.getOrElse(f, Map.empty).get(col)
-        .forall { case (mn, mx) => admits(mn, mx) }
-      val singleOk = !snap.statsCol.contains(col) ||
-        snap.stats.get(f).forall { case (mn, mx) => admits(mn, mx) }
-      val valsOk = snap.fileValues.getOrElse(f, Map.empty).get(col)
-        .forall(_.exists(keySet))
-      val bloomOk =
-        bloomed.get(f).forall(bf => keys.exists(bf.mightContainString))
-      multiOk && singleOk && valsOk && bloomOk
-    }
-  }
 
   /** [[writeFiles]] respecting the table's declared layout: a
     * single-`bucket()` table keeps its one-bucket-per-file SPJ
@@ -3424,8 +2949,8 @@ object TxTable {
     * data files rewrite — the daily-upsert write path at 100 TB costs
     * one manifest commit plus the batch's own bytes. None → fall back
     * to copy-on-write when the key type is not canonically lossless
-    * ([[dvMergeKeyLossless]]), the batch exceeds [[DvMergeMaxKeys]],
-    * or the table is empty (first write has nothing to hide).
+    * ([[FileIndex.canonicalLossless]]), the batch exceeds
+    * [[DvMergeMaxKeys]], or the table is empty (first write has nothing to hide).
     * Content-equal to the CoW [[merge]] by construction: the IN-set
     * hides exactly the rows the anti-join drops (same canonical cast
     * both sides), fresh files carry no dels so post-images matching
@@ -3437,7 +2962,7 @@ object TxTable {
     import org.apache.spark.sql.functions.col
     if (cur.files.isEmpty) return None
     val keyType = updates.schema.fields.find(_.name == key).map(_.dataType)
-    if (!keyType.exists(dvMergeKeyLossless)) return None
+    if (!keyType.exists(FileIndex.canonicalLossless)) return None
     // bounded driver state: the batch's distinct keys in canonical
     // form — limit(cap+1) bounds the collect BEFORE it runs
     val keysRaw = updates.filter(col(key).isNotNull)
@@ -3448,24 +2973,17 @@ object TxTable {
     requireDvColumns(spark, table, cur, Seq(key))
     val next = cur.version + 1
     val keys = keysRaw.sorted.toSeq
+    val ins = Seq(key -> keys)
     val touched =
-      if (keys.isEmpty) Nil
-      else candidateFilesForKeys(cur, key, keys, keyType)
+      if (keys.isEmpty) Nil else pruneFilesWhere(spark, table, cur, Nil, Nil, ins)
     // change feed first: it reads the PRE-merge (visible) table
     val changeFiles =
       mergeChangeFiles(spark, table, Some(cur), updates, key, next)
     val fresh = writeFilesDispatch(updates, table, next)
     // fresh post-image files get index metadata over the same tracked
     // columns (old files' entries stay valid as supersets)
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
-    val (freshMs, freshFv) =
-      recomputeMetadata(spark, table, fresh, statCols, valueCols)
-    val ins = Seq(key -> keys)
     commit(spark, table, next, cur.files ++ fresh, cur.txns,
-      cur.statsCol, cur.stats,
-      cur.multiStats ++ freshMs, cur.fileValues ++ freshFv,
-      cur.bloomCol, cur.blooms,
+      cur.index ++ reindex(spark, table, cur.index, fresh),
       op = "merge", changes = changeFiles,
       dels = cur.dels ++ (if (keys.isEmpty) Nil
         else touched.map(f => DelEntry(f, Nil, Nil, ins))))
@@ -3493,7 +3011,7 @@ object TxTable {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
     if (cur.files.isEmpty) return None
     val keyType = updates.schema.fields.find(_.name == key).map(_.dataType)
-    if (!keyType.exists(dvMergeKeyLossless)) return None
+    if (!keyType.exists(FileIndex.canonicalLossless)) return None
     val batchRaw = updates.filter(col(key).isNotNull)
       .select(col(key).cast("string")).distinct()
       .limit(DvMergeMaxKeys + 1)
@@ -3522,22 +3040,17 @@ object TxTable {
     val vanKeys = vanished.sorted.toSeq
     val touchedUpsert =
       if (batchKeys.isEmpty) Nil
-      else candidateFilesForKeys(cur, key, batchKeys, keyType)
-    // the by-source entry's candidates: files the scope prune admits
-    // AND the vanished-key prune admits (the entry is the conjunction)
+      else pruneFilesWhere(spark, table, cur, Nil, Nil, Seq(key -> batchKeys))
+    // the by-source entry's candidates: the entry IS the conjunction
+    // (scope AND key IN vanished), so it prunes as one predicate
     val touchedSync =
       if (vanKeys.isEmpty) Nil
-      else candidateFiles(cur, scopeRanges,
-        canonicalValueEq(spark, table, cur, scopeEq))
-        .intersect(candidateFilesForKeys(cur, key, vanKeys, keyType))
+      else pruneFilesWhere(spark, table, cur, scopeRanges, scopeEq,
+        Seq(key -> vanKeys))
     // change feed first: it reads the PRE-merge (visible) table
     val changeFiles = mergeSyncChangeFiles(spark, table, Some(cur),
       updates, key, scopeRanges, scopeEq, next)
     val fresh = writeFilesDispatch(updates, table, next)
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
-    val (freshMs, freshFv) =
-      recomputeMetadata(spark, table, fresh, statCols, valueCols)
     val upsertDels =
       if (batchKeys.isEmpty) Nil
       else touchedUpsert.map(f =>
@@ -3547,9 +3060,7 @@ object TxTable {
       else touchedSync.map(f =>
         DelEntry(f, scopeRanges, scopeEq, Seq(key -> vanKeys)))
     commit(spark, table, next, cur.files ++ fresh, cur.txns,
-      cur.statsCol, cur.stats,
-      cur.multiStats ++ freshMs, cur.fileValues ++ freshFv,
-      cur.bloomCol, cur.blooms,
+      cur.index ++ reindex(spark, table, cur.index, fresh),
       op = "merge", changes = changeFiles,
       dels = cur.dels ++ upsertDels ++ syncDels)
     widenDeclared(spark, table, updates)
@@ -3623,10 +3134,8 @@ object TxTable {
     val untouched = cur.files.filterNot(scoped.toSet)
     val scopedDf = readFilesDv(spark, table, cur, scoped,
       mappingAt(spark, table, Some(cur.version)))
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
-    val cluster = valueCols.map(v => PartTransform.parse(v).expr) ++
-      statCols.map(c)
+    val cluster = cur.index.valueCols.map(v => PartTransform.parse(v).expr) ++
+      cur.index.statCols.map(c)
     val fresh = declaredBucket(spark, table) match {
       // single-bucket table: folded files keep the SPJ layout
       case Some(b) => writeFilesBucketed(scopedDf, table, next, b)
@@ -3635,16 +3144,10 @@ object TxTable {
           scopedDf.repartitionByRange(targetFiles, cluster: _*)
         else scopedDf.repartition(targetFiles), table, next)
     }
-    val (ms, fv) = recomputeMetadata(spark, table, fresh,
-      statCols, valueCols)
     val untouchedSet = untouched.toSet
-    val keptBlooms = cur.blooms.filter { case (f, _) => untouchedSet(f) }
-    val keptStats = cur.stats.filter { case (f, _) => untouchedSet(f) }
     commit(spark, table, next, untouched ++ fresh, cur.txns,
-      cur.statsCol.filter(_ => keptStats.nonEmpty), keptStats,
-      cur.multiStats.filter { case (f, _) => untouchedSet(f) } ++ ms,
-      cur.fileValues.filter { case (f, _) => untouchedSet(f) } ++ fv,
-      cur.bloomCol.filter(_ => keptBlooms.nonEmpty), keptBlooms,
+      cur.index.restrictTo(untouchedSet) ++
+        reindex(spark, table, cur.index, fresh),
       op = "compact",
       dels = cur.dels.filter(d => untouchedSet(d.path)))
     (next, scoped.size)
@@ -3666,8 +3169,7 @@ object TxTable {
     requireDvColumns(spark, table, cur,
       (ranges.map(_._1) ++ valueEq.map(_._1)).distinct)
     val next = cur.version + 1
-    val touched =
-      candidateFiles(cur, ranges, canonicalValueEq(spark, table, cur, valueEq))
+    val touched = pruneFilesWhere(spark, table, cur, ranges, valueEq)
     val pred = predicateColumn(ranges, valueEq)
     // change feed (opt-in): the deleted images are the touched files'
     // currently-VISIBLE matching rows — exactly what copy-on-write
@@ -3679,9 +3181,7 @@ object TxTable {
           mappingAt(spark, table, Some(cur.version)))
           .filter(coalesce(pred, lit(false)))
           .withColumn(ChangeTypeCol, lit("delete")), table, next)
-    commit(spark, table, next, cur.files, cur.txns,
-      cur.statsCol, cur.stats, cur.multiStats, cur.fileValues,
-      cur.bloomCol, cur.blooms,
+    commit(spark, table, next, cur.files, cur.txns, cur.index,
       op = "delete", changes = changeFiles,
       dels = cur.dels ++ touched.map(f => DelEntry(f, ranges, valueEq)))
     (next, touched.size, cur.files.size)
@@ -3703,8 +3203,7 @@ object TxTable {
     requireDvColumns(spark, table, cur,
       (ranges.map(_._1) ++ valueEq.map(_._1)).distinct)
     val next = cur.version + 1
-    val touched =
-      candidateFiles(cur, ranges, canonicalValueEq(spark, table, cur, valueEq))
+    val touched = pruneFilesWhere(spark, table, cur, ranges, valueEq)
     val pred = predicateColumn(ranges, valueEq)
     val matched = () => readFilesDv(spark, table, cur, touched,
       mappingAt(spark, table, Some(cur.version)))
@@ -3722,14 +3221,8 @@ object TxTable {
     // fresh post-image files get index metadata over the same tracked
     // columns, so they prune like any other file; old files' entries
     // stay valid as supersets
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
-    val (freshMs, freshFv) =
-      recomputeMetadata(spark, table, fresh, statCols, valueCols)
     commit(spark, table, next, cur.files ++ fresh, cur.txns,
-      cur.statsCol, cur.stats,
-      cur.multiStats ++ freshMs, cur.fileValues ++ freshFv,
-      cur.bloomCol, cur.blooms,
+      cur.index ++ reindex(spark, table, cur.index, fresh),
       op = "update", changes = changeFiles,
       dels = cur.dels ++ touched.map(f => DelEntry(f, ranges, valueEq)))
     next
@@ -3845,13 +3338,12 @@ object TxTable {
     * recomputes stats the same way), dispatched on what the snapshot
     * carries:
     *   - bloom-indexed → re-hash-cluster on the key, rebuild per-file
-    *     blooms ([[readPoint]] pruning survives);
+    *     blooms (point-lookup pruning survives);
     *   - two stat columns, no value sets → re-Z-ORDER on the pair
-    *     (the layout a 2-column multiStats table exists for: either
+    *     (the layout a 2-column stats table exists for: either
     *     column's predicate keeps pruning after compaction);
-    *   - other multi-column metadata → lexicographic (valueCols ++
+    *   - other stats / value sets → lexicographic (valueCols ++
     *     statCols) range clustering, stats + value sets recomputed;
-    *   - single [[overwriteIndexed]] column → range-partition on it;
     *   - no index → plain coalescing repartition.
     * A concurrent writer committing first wins the version and this
     * throws [[TxConflictException]]; compaction is safe to just
@@ -3880,7 +3372,7 @@ object TxTable {
     val t = PartTransform.parse(partCol)
     requireZoneAgreement(spark, table, Seq(t))
     val scoped = cur.files.filter(f =>
-      cur.fileValues.get(f).flatMap(_.get(t.name)) match {
+      cur.index.values.get(f).flatMap(_.get(t.name)) match {
         case Some(vs) => vs.exists(vset)
         case None => true // no metadata → may hold the partition
       })
@@ -3890,25 +3382,16 @@ object TxTable {
     // their visible rows and shed their dels (Delta's DV-fold)
     val scopedDf = readFilesDv(spark, table, cur, scoped,
       mappingAt(spark, table, Some(cur.version)))
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = (cur.fileValues.values.flatMap(_.keys).toSeq
-      ++ Seq(t.name)).distinct.sorted
     val files = declaredBucket(spark, table) match {
       // single-bucket table: the scoped rewrite keeps the SPJ layout
       case Some(b) => writeFilesBucketed(scopedDf, table, next, b)
       case None => writeFiles(
         scopedDf.repartitionByRange(targetFiles, t.expr), table, next)
     }
-    val (ms, fv) = recomputeMetadata(spark, table, files,
-      statCols, valueCols)
     val untouchedSet = untouched.toSet
-    val keptBlooms = cur.blooms.filter { case (f, _) => untouchedSet(f) }
-    val keptStats = cur.stats.filter { case (f, _) => untouchedSet(f) }
     commit(spark, table, next, untouched ++ files, cur.txns,
-      cur.statsCol.filter(_ => keptStats.nonEmpty), keptStats,
-      cur.multiStats.filter { case (f, _) => untouchedSet(f) } ++ ms,
-      cur.fileValues.filter { case (f, _) => untouchedSet(f) } ++ fv,
-      cur.bloomCol.filter(_ => keptBlooms.nonEmpty), keptBlooms,
+      cur.index.restrictTo(untouchedSet) ++
+        reindex(spark, table, cur.index, files, Seq(t.name)),
       op = "compact",
       dels = cur.dels.filter(d => untouchedSet(d.path)))
     next
@@ -3941,7 +3424,7 @@ object TxTable {
         s"migrate_layout requires a declared bucket() layout at " +
           s"$table — CALL system.evolve_partitions first"))
     val nonConforming = cur.files.filter(f =>
-      !cur.fileValues.get(f).flatMap(_.get(b.name)).exists(_.size == 1))
+      !cur.index.values.get(f).flatMap(_.get(b.name)).exists(_.size == 1))
     if (nonConforming.isEmpty) return (cur.version, 0, 0)
     val scoped = nonConforming.take(maxFiles)
     val scopedSet = scoped.toSet
@@ -3949,20 +3432,11 @@ object TxTable {
     val scopedDf = readFilesDv(spark, table, cur, scoped,
       mappingAt(spark, table, Some(cur.version)))
     val fresh = writeFilesBucketed(scopedDf, table, next, b)
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = (cur.fileValues.values.flatMap(_.keys).toSeq ++
-      Seq(b.name)).distinct.sorted
-    val (ms, fv) = recomputeMetadata(spark, table, fresh,
-      statCols, valueCols)
     val kept = cur.files.filterNot(scopedSet)
     val keptSet = kept.toSet
-    val keptBlooms = cur.blooms.filter { case (f, _) => keptSet(f) }
-    val keptStats = cur.stats.filter { case (f, _) => keptSet(f) }
     commit(spark, table, next, kept ++ fresh, cur.txns,
-      cur.statsCol.filter(_ => keptStats.nonEmpty), keptStats,
-      cur.multiStats.filter { case (f, _) => keptSet(f) } ++ ms,
-      cur.fileValues.filter { case (f, _) => keptSet(f) } ++ fv,
-      cur.bloomCol.filter(_ => keptBlooms.nonEmpty), keptBlooms,
+      cur.index.restrictTo(keptSet) ++
+        reindex(spark, table, cur.index, fresh, Seq(b.name)),
       op = "compact",
       dels = cur.dels.filter(d => keptSet(d.path)))
     (next, scoped.size, nonConforming.size - scoped.size)
@@ -3982,74 +3456,36 @@ object TxTable {
     }
 
   def compact(spark: SparkSession, table: String, targetFiles: Int): Long = {
-    import org.apache.spark.sql.functions.{col => c, input_file_name, max => fmax, min => fmin}
+    import org.apache.spark.sql.functions.col
     require(targetFiles >= 1)
     val cur = snapshot(spark, table).getOrElse(
       throw new IllegalArgumentException(s"nothing to compact at $table"))
     val next = cur.version + 1
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
-    val bucketDecl = declaredBucket(spark, table)
-    if (bucketDecl.isDefined) {
+    val (statCols, valueCols) = (cur.index.statCols, cur.index.valueCols)
+    val bucket = declaredBucket(spark, table)
+    val bloomCol = cur.index.bloom.map(_._1).filter(_ => bucket.isEmpty)
+    val all = read(spark, table)
+    val files = (bucket, bloomCol) match {
       // single-bucket table: preserve the SPJ layout (one bucket per
       // file) and recompute the metadata the layout prunes by
-      val files =
-        writeFilesBucketed(read(spark, table), table, next, bucketDecl.get)
-      val (ms, fv) = recomputeMetadata(spark, table, files,
-        statCols, valueCols)
-      commit(spark, table, next, files, cur.txns,
-        multiStats = ms, fileValues = fv, op = "compact")
-    } else if (cur.bloomCol.isDefined) {
-      val bc = cur.bloomCol.get
-      val files = writeFiles(
-        read(spark, table).repartition(targetFiles, c(bc)), table, next)
-      commit(spark, table, next, files, cur.txns,
-        bloomCol = Some(bc), blooms = buildBlooms(spark, table, files, bc),
-        op = "compact")
-    } else if (valueCols.isEmpty && statCols.size == 2) {
-      val (zdf, helpers, z) =
-        Layout.withMortonCode(read(spark, table), statCols(0), statCols(1))
-      val files = writeFiles(
-        zdf.repartitionByRange(targetFiles, c(z))
-          .sortWithinPartitions(c(z)).drop(helpers: _*), table, next)
-      val (ms, _) = recomputeMetadata(spark, table, files, statCols, Nil)
-      commit(spark, table, next, files, cur.txns, multiStats = ms,
-        op = "compact")
-    } else if (statCols.nonEmpty || valueCols.nonEmpty) {
-      // value-col entries may be transform names ("days(ts)",
-      // "bucket(8,k)") — cluster on the DERIVED expression
-      val files = writeFiles(
-        read(spark, table)
-          .repartitionByRange(targetFiles,
-            valueCols.map(v => PartTransform.parse(v).expr)
-              ++ statCols.map(c): _*),
-        table, next)
-      val (ms, fv) = recomputeMetadata(spark, table, files, statCols, valueCols)
-      commit(spark, table, next, files, cur.txns,
-        multiStats = ms, fileValues = fv, op = "compact")
-    } else cur.statsCol match {
-      case None =>
-        val files = writeFiles(
-          read(spark, table).repartition(targetFiles), table, next)
-        commit(spark, table, next, files, cur.txns, op = "compact")
-      case Some(idxCol) =>
-        val files = writeFiles(
-          read(spark, table).repartitionByRange(targetFiles, c(idxCol)),
-          table, next)
-        val byName = files.map(f => f.split('/').last -> f).toMap
-        val stats = spark.read
-          .parquet(files.map(new Path(table, _).toString): _*)
-          .groupBy(input_file_name().as("__f"))
-          .agg(fmin(c(idxCol)).as("__mn"), fmax(c(idxCol)).as("__mx"))
-          .collect()
-          .flatMap { r =>
-            val name = r.getString(0).split('/').last
-            byName.get(name).map(f =>
-              f -> (r.get(1).toString.toDouble, r.get(2).toString.toDouble))
-          }.toMap
-        commit(spark, table, next, files, cur.txns, Some(idxCol), stats,
-          op = "compact")
+      case (Some(b), _) => writeFilesBucketed(all, table, next, b)
+      case (_, Some(bc)) =>
+        writeFiles(all.repartition(targetFiles, col(bc)), table, next)
+      case _ => writeFiles(
+        if (valueCols.isEmpty && statCols.size == 2)
+          zordered(all, targetFiles, statCols(0), statCols(1))
+        // value-col entries may be transform names ("days(ts)",
+        // "bucket(8,k)") — cluster on the DERIVED expression
+        else if (statCols.nonEmpty || valueCols.nonEmpty)
+          all.repartitionByRange(targetFiles,
+            valueCols.map(v => PartTransform.parse(v).expr) ++
+              statCols.map(col): _*)
+        else all.repartition(targetFiles), table, next)
     }
+    commit(spark, table, next, files, cur.txns,
+      bloomCol.fold(reindex(spark, table, cur.index, files))(bc =>
+        FileIndex(bloom = Some(bc -> buildBlooms(spark, table, files, bc)))),
+      op = "compact")
     next
   }
 
@@ -4067,16 +3503,12 @@ object TxTable {
     val rows = versions.flatMap(v => snapshot(spark, table, Some(v)))
       .map { s =>
         (s.version, s.op, s.files.size.toLong, s.txns.size.toLong,
-          s.statsCol.orNull,
-          s.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-            .mkString(","),
-          s.bloomCol.orNull, s.changes.size.toLong, s.ts,
-          s.dels.size.toLong)
+          s.index.statCols.mkString(","), s.index.bloom.map(_._1).orNull,
+          s.changes.size.toLong, s.ts, s.dels.size.toLong)
       }
     import spark.implicits._
-    rows.toDF("version", "op", "n_files", "n_txns",
-      "stats_col", "multi_stat_cols", "bloom_col", "n_change_files",
-      "commit_ts", "n_dels")
+    rows.toDF("version", "op", "n_files", "n_txns", "stat_cols",
+      "bloom_col", "n_change_files", "commit_ts", "n_dels")
   }
 
   /** RESTORE: make `version`'s content the new HEAD as a fresh commit
@@ -4105,27 +3537,7 @@ object TxTable {
       .getOrElse(ColumnMapping.Mapping(Nil))
     val headM = mappingAt(spark, table, Some(cur.version))
       .getOrElse(ColumnMapping.Mapping(Nil))
-    def rk(k: String): Option[String] = PartTransform.parse(k) match {
-      case PartIdentity(cn) => headM.logicalOf(targetM.phys(cn))
-      case PartDays(cn) =>
-        headM.logicalOf(targetM.phys(cn)).map(n => s"days($n)")
-      case PartMonths(cn) =>
-        headM.logicalOf(targetM.phys(cn)).map(n => s"months($n)")
-      case PartHours(cn) =>
-        headM.logicalOf(targetM.phys(cn)).map(n => s"hours($n)")
-      case PartYears(cn) =>
-        headM.logicalOf(targetM.phys(cn)).map(n => s"years($n)")
-      case PartBucket(nb, cn) =>
-        headM.logicalOf(targetM.phys(cn)).map(n => s"bucket($nb,$n)")
-      case PartTruncate(w, cn) =>
-        headM.logicalOf(targetM.phys(cn)).map(n => s"truncate($w,$n)")
-    }
-    val ms2 = target.multiStats.map { case (file, cols) =>
-      file -> cols.flatMap { case (k, v) => rk(k).map(_ -> v) } }
-    val fv2 = target.fileValues.map { case (file, cols) =>
-      file -> cols.flatMap { case (k, v) => rk(k).map(_ -> v) } }
-    val statsCol2 = target.statsCol.flatMap(rk)
-    val bloomCol2 = target.bloomCol.flatMap(rk)
+    def rk(c: String): Option[String] = headM.logicalOf(targetM.phys(c))
     // deletion predicates travel with the files they hide rows of;
     // their columns rekey like every logical-keyed field. A predicate
     // column DROPPED since the target cannot rekey — restoring would
@@ -4146,10 +3558,7 @@ object TxTable {
         d.ins.map { case (c, vs) => (re(c), vs) })
     }
     commit(spark, table, next, target.files, cur.txns,
-      statsCol2, if (statsCol2.isDefined) target.stats else Map.empty,
-      ms2, fv2,
-      bloomCol2, if (bloomCol2.isDefined) target.blooms else Map.empty,
-      op = "restore", dels = dels2)
+      target.index.renameColumns(rk), op = "restore", dels = dels2)
     next
   }
 

@@ -63,8 +63,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(TxTable.read(spark, dir, asOf = Some(1L))
       .filter($"k" === 7L).count() === 1L)
     // index metadata carried verbatim (supersets stay correct)
-    assert(after.multiStats === before.multiStats)
-    assert(after.fileValues === before.fileValues)
+    assert(after.index.stats === before.index.stats)
+    assert(after.index.values === before.index.values)
   }
 
   test("predicates stack; equality form; null predicate keeps rows") {
@@ -103,7 +103,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(got.filter(r => r._1 < 5 || r._1 > 8)
       .forall(_._2 != "UP"))
     // fresh files got index metadata over the tracked columns
-    assert(fresh.forall(f => after.multiStats.contains(f)),
+    assert(fresh.forall(f => after.index.stats.contains(f)),
       "fresh post-image files must carry recomputed stats")
   }
 
@@ -504,7 +504,7 @@ class DeletionVectorSpec extends AnyFunSuite {
       .toDF("sk", "c").repartition(1)
     TxTable.overwriteIndexedMulti(base, dir, statCols = Seq("sk"))
     val snap0 = TxTable.snapshot(spark, dir).get
-    assert(snap0.multiStats.values.exists(_.contains("sk")),
+    assert(snap0.index.stats.values.exists(_.contains("sk")),
       "test setup: string stats must be recorded for the prune to arm")
     TxTable.enableDeletionVectors(spark, dir)
     val batch = Seq(("9", 999L), ("42", 4200L)).toDF("sk", "c")

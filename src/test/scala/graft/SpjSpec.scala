@@ -68,7 +68,7 @@ class SpjSpec extends AnyFunSuite {
     val snap = TxTable.snapshot(spark, s"$root/t").get
     assert(snap.files.nonEmpty)
     val sets = snap.files.map(f =>
-      snap.fileValues.get(f).flatMap(_.get("bucket(8,k)")))
+      snap.index.values.get(f).flatMap(_.get("bucket(8,k)")))
     assert(sets.forall(_.exists(_.size == 1)),
       s"every file must hold exactly one bucket: $sets")
     // all 8 buckets present, one file each on the first write
@@ -81,7 +81,7 @@ class SpjSpec extends AnyFunSuite {
     spark.sql("INSERT INTO spjw.t VALUES (1000, 'x')")
     val snap2 = TxTable.snapshot(spark, s"$root/t").get
     assert(snap2.files.map(f =>
-      snap2.fileValues.get(f).flatMap(_.get("bucket(8,k)")))
+      snap2.index.values.get(f).flatMap(_.get("bucket(8,k)")))
       .forall(_.exists(_.size == 1)))
   }
 
@@ -178,7 +178,7 @@ class SpjSpec extends AnyFunSuite {
       Seq((1L, "a"), (2L, "b"), (3L, "c")))
     val snap = TxTable.snapshot(spark, s"$root/t").get
     assert(snap.files.map(f =>
-      snap.fileValues.get(f).flatMap(_.get("bucket(4,kid)")))
+      snap.index.values.get(f).flatMap(_.get("bucket(4,kid)")))
       .forall(_.exists(_.size == 1)),
       "post-rename bucket files must keep singleton value sets")
   }
@@ -205,7 +205,7 @@ class SpjSpec extends AnyFunSuite {
     val folded = TxTable.snapshot(spark, dir).get
     assert(folded.dels.isEmpty, "compact must fold the predicates")
     assert(folded.files.forall(f =>
-      folded.fileValues.get(f).flatMap(_.get("bucket(4,k)"))
+      folded.index.values.get(f).flatMap(_.get("bucket(4,k)"))
         .exists(_.size == 1)),
       "compaction of a declared-bucket table must keep singleton " +
         "bucket value sets (the SPJ invariant)")
@@ -318,7 +318,7 @@ class SpjSpec extends AnyFunSuite {
     spark.sql("ALTER TABLE spjcm.a RENAME COLUMN k TO kid")
     val snap = TxTable.snapshot(spark, s"$root/a").get
     assert(snap.files.forall(f =>
-      snap.fileValues.get(f).flatMap(_.get("bucket(8,kid)"))
+      snap.index.values.get(f).flatMap(_.get("bucket(8,kid)"))
         .exists(_.size == 1)),
       "rename must rekey the bucket value sets to the new name")
     withBucketing {
@@ -358,7 +358,7 @@ class SpjSpec extends AnyFunSuite {
     spark.sql("INSERT INTO spjm.a VALUES (203, 406, 'o')")
     val snapE = TxTable.snapshot(spark, s"$root/a").get
     val conforming = snapE.files.filter(f =>
-      snapE.fileValues.get(f).flatMap(_.get("bucket(8,k)"))
+      snapE.index.values.get(f).flatMap(_.get("bucket(8,k)"))
         .exists(_.size == 1))
     assert(conforming.nonEmpty && conforming.size < snapE.files.size,
       "test setup: need both generations present")
@@ -402,7 +402,7 @@ class SpjSpec extends AnyFunSuite {
         assert(r2.getAs[Long]("remaining_files") === 0L)
         val after2 = TxTable.snapshot(spark, s"$root/a").get
         val conformingBefore2 = before2.files.filter(f =>
-          before2.fileValues.get(f).flatMap(_.get("bucket(8,k)"))
+          before2.index.values.get(f).flatMap(_.get("bucket(8,k)"))
             .exists(_.size == 1))
         assert(conformingBefore2.forall(after2.files.toSet),
           "already-conforming files must carry over byte-untouched")

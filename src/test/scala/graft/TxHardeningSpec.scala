@@ -259,7 +259,7 @@ class TxHardeningSpec extends AnyFunSuite {
     rows.toDF("k", "ts").createOrReplaceTempView("hh_src")
     spark.sql("INSERT INTO txhh.h SELECT k, ts FROM hh_src")
     val snap = TxTable.snapshot(spark, dir).get
-    assert(snap.fileValues.values.exists(_.contains("hours(ts)")),
+    assert(snap.index.values.values.exists(_.contains("hours(ts)")),
       "hours() INSERT must record hour value sets")
     // a 2-hour half-open range opens only those hours' files
     val q = spark.sql("SELECT k FROM txhh.h WHERE " +
@@ -268,7 +268,7 @@ class TxHardeningSpec extends AnyFunSuite {
     assert(q.as[Long].collect().sorted.toSeq === (20L until 28L))
     val opened = scannedFiles(q)
     val hourFiles = snap.files.filter(f =>
-      snap.fileValues.get(f).flatMap(_.get("hours(ts)")).exists(_.exists(h =>
+      snap.index.values.get(f).flatMap(_.get("hours(ts)")).exists(_.exists(h =>
         h == "2024-03-01 05:00:00" || h == "2024-03-01 06:00:00")))
       .map(_.split('/').last).toSet
     assert(opened.subsetOf(hourFiles),
@@ -290,7 +290,7 @@ class TxHardeningSpec extends AnyFunSuite {
     rows.toDF("k", "ts").createOrReplaceTempView("yy_src")
     spark.sql("INSERT INTO txyy.y SELECT k, ts FROM yy_src")
     val snap1 = TxTable.snapshot(spark, dir).get
-    assert(snap1.fileValues.values.exists(_.contains("years(ts)")),
+    assert(snap1.index.values.values.exists(_.contains("years(ts)")),
       "years() INSERT must record year value sets")
     // a plain ts range inside ONE year opens only that year's files
     val q = spark.sql("SELECT k FROM txyy.y WHERE " +
@@ -299,7 +299,7 @@ class TxHardeningSpec extends AnyFunSuite {
     assert(q.as[Long].collect().sorted.toSeq === (8L until 16L))
     val opened = scannedFiles(q)
     val yearFiles = snap1.files.filter(f =>
-      snap1.fileValues.get(f).flatMap(_.get("years(ts)"))
+      snap1.index.values.get(f).flatMap(_.get("years(ts)"))
         .exists(_.contains("2022-01-01")))
       .map(_.split('/').last).toSet
     assert(opened.subsetOf(yearFiles),
@@ -315,7 +315,7 @@ class TxHardeningSpec extends AnyFunSuite {
     assert(got === ((0L until 8L) ++ (16L until 24L) :+ 100L).sorted)
     val snap2 = TxTable.snapshot(spark, dir).get
     val untouched = snap1.files.filter(f =>
-      snap1.fileValues.get(f).flatMap(_.get("years(ts)"))
+      snap1.index.values.get(f).flatMap(_.get("years(ts)"))
         .exists(vs => !vs("2022-01-01")))
     assert(untouched.nonEmpty && untouched.forall(snap2.files.toSet),
       "years() overwrite rewrote a provably-untouched year")
@@ -332,14 +332,14 @@ class TxHardeningSpec extends AnyFunSuite {
     rows.toDF("code", "v").createOrReplaceTempView("tr_src")
     spark.sql("INSERT INTO txtru.t SELECT code, v FROM tr_src")
     val snap1 = TxTable.snapshot(spark, dir).get
-    assert(snap1.fileValues.values.exists(_.contains("truncate(4,code)")),
+    assert(snap1.index.values.values.exists(_.contains("truncate(4,code)")),
       "truncate() INSERT must record prefix value sets")
     // a string equality prunes through the prefix generated filter
     val q = spark.sql("SELECT v FROM txtru.t WHERE code = 'BBBB-3'")
     assert(q.as[Long].collect().toSeq === Seq(3L))
     val opened = scannedFiles(q)
     val prefFiles = snap1.files.filter(f =>
-      snap1.fileValues.get(f).flatMap(_.get("truncate(4,code)"))
+      snap1.index.values.get(f).flatMap(_.get("truncate(4,code)"))
         .exists(_.contains("BBBB")))
       .map(_.split('/').last).toSet
     assert(opened.subsetOf(prefFiles),
@@ -357,7 +357,7 @@ class TxHardeningSpec extends AnyFunSuite {
       .head() === 13L)
     val snap2 = TxTable.snapshot(spark, dir).get
     val untouched = snap1.files.filter(f =>
-      snap1.fileValues.get(f).flatMap(_.get("truncate(4,code)"))
+      snap1.index.values.get(f).flatMap(_.get("truncate(4,code)"))
         .exists(vs => !vs("BBBB")))
     assert(untouched.nonEmpty && untouched.forall(snap2.files.toSet),
       "truncate() overwrite rewrote a provably-untouched prefix")
@@ -384,7 +384,7 @@ class TxHardeningSpec extends AnyFunSuite {
     spark.sql("INSERT INTO txtcp.t SELECT code, v FROM tcp_src")
     val snap = TxTable.snapshot(spark, dir).get
     // recorded form: 2 code points = emoji + 'A' (3 UTF-16 units)
-    assert(snap.fileValues.values
+    assert(snap.index.values.values
       .exists(_.get("truncate(2,code)").exists(_.contains(s"${emoji}A"))),
       "canonical prefix must be code-point sliced")
     // equality through the generated filter must find the row
@@ -396,7 +396,7 @@ class TxHardeningSpec extends AnyFunSuite {
     assert(q.as[Long].collect().toSeq === Seq(1L))
     val opened = scannedFiles(q)
     val bbFiles = snap.files.filter(f =>
-      snap.fileValues.get(f).flatMap(_.get("truncate(2,code)"))
+      snap.index.values.get(f).flatMap(_.get("truncate(2,code)"))
         .exists(_.contains("BB"))).map(_.split('/').last).toSet
     assert(opened.intersect(bbFiles).isEmpty,
       "emoji-prefix equality must still prune the other prefix's files")

@@ -89,7 +89,7 @@ class TxMaintenanceSpec extends AnyFunSuite {
     val after = TxTable.snapshot(spark, dir).get
     // b-only files carried over untouched; a's merged
     val bFiles = before.files.filter(f =>
-      before.fileValues.get(f).flatMap(_.get("seg"))
+      before.index.values.get(f).flatMap(_.get("seg"))
         .exists(vs => vs == Set("b")))
     assert(bFiles.forall(after.files.contains),
       "partition-scoped OPTIMIZE rewrote out-of-scope files")

@@ -20,6 +20,22 @@ class TxSqlSpec extends AnyFunSuite {
   private def freshRoot(): String =
     Files.createTempDirectory("graft_txsql_").toString
 
+  /** The file names the plan's [[graft.sources.TxFileIndex]] kept at
+    * its last listing — the SQL scan's own prune decision. */
+  private def indexCandidates(df: org.apache.spark.sql.DataFrame): Set[String] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
+    val root = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    root.collect { case b: BatchScanExec => b.scan }
+      .collect { case p: ParquetScan => p.fileIndex }
+      .collect { case t: graft.sources.TxFileIndex => t.lastCandidates }
+      .flatten.head
+  }
+
   /** Distinct data-file names the executed plan actually scanned. */
   private def scannedFiles(df: org.apache.spark.sql.DataFrame): Set[String] = {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -88,7 +104,7 @@ class TxSqlSpec extends AnyFunSuite {
     val root = freshRoot()
     val dir = seed(root)
     val snap = TxTable.snapshot(spark, dir).get
-    val expected = TxTable.pruneFilesWhere(snap,
+    val expected = TxTable.pruneFilesWhere(spark, dir, snap,
         Seq(("amt", 10.0, 20.0)), Seq(("prio", "URGENT")))
       .map(_.split('/').last).toSet
     assert(expected.size < snap.files.size,
@@ -99,6 +115,44 @@ class TxSqlSpec extends AnyFunSuite {
       .filter($"amt" >= 10.0 && $"amt" <= 20.0 && $"prio" === "URGENT")
     q.collect()
     assert(scannedFiles(q) === expected)
+
+    // every layout, every reader: the SQL index's prune, the API
+    // prune and the files copy-on-write DELETE rewrites are one set
+    val rows = (1 to 4000).map { i =>
+      (i.toLong, i % 97 * 1.0, if (i % 5 == 0) "URGENT" else "LOW")
+    }.toDF("k", "amt", "prio")
+    val layouts: Seq[(String, String => Long,
+        org.apache.spark.sql.Column, Seq[(String, Double, Double)],
+        Seq[(String, String)])] = Seq(
+      ("single-column stats",
+        d => TxTable.overwriteIndexedMulti(rows, d, Seq("k")),
+        $"k" >= 100L && $"k" <= 300L, Seq(("k", 100.0, 300.0)), Nil),
+      ("multi-column",
+        d => TxTable.overwriteIndexedMulti(rows, d, Seq("k", "amt"),
+          Seq("prio")),
+        $"k" >= 100L && $"k" <= 3000L && $"prio" === "URGENT",
+        Seq(("k", 100.0, 3000.0)), Seq(("prio", "URGENT"))),
+      ("z-order", d => TxTable.overwriteZordered(rows, d, "k", "amt"),
+        $"k" <= 500L && $"amt" <= 10.0,
+        Seq(("k", Double.NegativeInfinity, 500.0),
+          ("amt", Double.NegativeInfinity, 10.0)), Nil),
+      ("bloom", d => TxTable.overwriteIndexedBloom(rows, d, "k"),
+        $"k" === 1234L, Seq(("k", 1234.0, 1234.0)), Nil))
+    layouts.foreach { case (name, write, pred, ranges, eqs) =>
+      val d = s"${freshRoot()}/${name.replace(' ', '_')}"
+      write(d)
+      val snap = TxTable.snapshot(spark, d).get
+      val api = TxTable.pruneFilesWhere(spark, d, snap, ranges, eqs).toSet
+      assert(api.nonEmpty && api.size < snap.files.size,
+        s"$name: prune must skip files: ${api.size} of ${snap.files.size}")
+      val sql = spark.read.format("txtable").load(d).filter(pred)
+      sql.collect()
+      assert(indexCandidates(sql) === api.map(_.split('/').last), name)
+      TxTable.deleteWhere(spark, d, ranges, eqs)
+      val rewritten = snap.files.toSet --
+        TxTable.snapshot(spark, d).get.files.toSet
+      assert(rewritten === api, name)
+    }
   }
 
   test("unprunable predicates keep every file (fail-open translation)") {
@@ -165,19 +219,23 @@ class TxSqlSpec extends AnyFunSuite {
     val base = (1 to 3000).map(i => (i.toLong, s"u$i")).toDF("id", "u")
     TxTable.overwriteIndexedBloom(base, dir, "id")
     val before = TxTable.snapshot(spark, dir).get
-    assert(before.blooms.nonEmpty)
+    def blooms(s: TxTable.Snapshot) = s.index.bloom.fold(
+      Map.empty[String, Array[Byte]])(_._2)
+    assert(blooms(before).nonEmpty)
     TxTable.append(Seq((9001L, "new")).toDF("id", "u"), dir)
     val after = TxTable.snapshot(spark, dir).get
-    assert(after.blooms.keySet === before.blooms.keySet &&
-      after.blooms.forall { case (k, v) =>
-        java.util.Arrays.equals(v, before.blooms(k))
+    assert(blooms(after).keySet === blooms(before).keySet &&
+      blooms(after).forall { case (k, v) =>
+        java.util.Arrays.equals(v, blooms(before)(k))
       }, "append must carry existing blooms forward")
     // a point read still prunes indexed files AND sees appended rows
-    val pruned = TxTable.pruneFilesPoints(after, "id", Seq("17"))
+    val pruned = TxTable.pruneFilesWhere(spark, dir, after, Nil, Nil,
+      Seq("id" -> Seq("17")))
     assert(pruned.size < after.files.size)
-    assert(TxTable.readPoint(spark, dir, "id", "9001").count() === 1)
-    assert(TxTable.readPoints(spark, dir, "id", Seq("17", "9001"))
-      .count() === 2)
+    assert(TxTable.readWhere(spark, dir, Nil, Seq("id" -> "9001"))
+      .count() === 1)
+    assert(TxTable.readWhere(spark, dir, Nil, Nil,
+      Seq("id" -> Seq("17", "9001"))).count() === 2)
   }
 
   test("SQL integral point-equality probes the bloom index at plan time") {
@@ -188,8 +246,8 @@ class TxSqlSpec extends AnyFunSuite {
     val df = spark.read.format("txtable").load(dir).filter($"id" === 17L)
     assert(df.count() === 1)
     val scanned = scannedFiles(df)
-    val expected = TxTable.pruneFilesPoints(snap, "id", Seq("17"))
-      .map(_.split('/').last).toSet
+    val expected = TxTable.pruneFilesWhere(spark, dir, snap, Nil, Nil,
+      Seq("id" -> Seq("17"))).map(_.split('/').last).toSet
     assert(scanned === expected,
       s"SQL scan opened $scanned, bloom admits $expected")
     assert(scanned.size < snap.files.size,
@@ -430,7 +488,7 @@ class TxSqlSpec extends AnyFunSuite {
     assert(carried.nonEmpty && carried.size < before.files.size,
       s"update must prune: carried ${carried.size}/${before.files.size}")
     // carried files keep their index metadata
-    assert(carried.forall(f => after.multiStats.contains(f)),
+    assert(carried.forall(f => after.index.stats.contains(f)),
       "untouched files must keep their stats")
     // exact semantics over the whole table
     val got = TxTable.read(spark, dir)
@@ -577,7 +635,7 @@ class TxSqlSpec extends AnyFunSuite {
     spark.sql("INSERT INTO txpt.pt VALUES (1, 'a'), (2, 'a'), (3, 'b'), " +
       "(4, 'c')")
     val snap1 = graft.sources.TxTable.snapshot(spark, dir).get
-    assert(snap1.fileValues.nonEmpty,
+    assert(snap1.index.values.nonEmpty,
       "partitioned INSERT INTO must record value sets")
     // dynamic overwrite: only partition b replaces; a and c carry
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
@@ -591,7 +649,7 @@ class TxSqlSpec extends AnyFunSuite {
       // files provably outside partition b carried over untouched
       val snap2 = graft.sources.TxTable.snapshot(spark, dir).get
       val expectUntouched = snap1.files.filter(f =>
-        snap1.fileValues.get(f).flatMap(_.get("seg"))
+        snap1.index.values.get(f).flatMap(_.get("seg"))
           .exists(vs => !vs("b")))
       assert(expectUntouched.nonEmpty &&
         expectUntouched.forall(snap2.files.toSet),
@@ -661,7 +719,7 @@ class TxSqlSpec extends AnyFunSuite {
       "(3, TIMESTAMP '2024-03-02 05:00:00'), " +
       "(4, TIMESTAMP '2024-03-03 12:00:00')")
     val snap1 = graft.sources.TxTable.snapshot(spark, dir).get
-    assert(snap1.fileValues.values.exists(_.contains("days(ts)")),
+    assert(snap1.index.values.values.exists(_.contains("days(ts)")),
       "partitioned INSERT must record days(ts) value sets")
     // replace exactly day 2024-03-02 (row-level timestamps differ —
     // the DAY is the partition) via the API route
@@ -674,7 +732,7 @@ class TxSqlSpec extends AnyFunSuite {
     // files provably outside the incoming day carried over untouched
     val snap2 = graft.sources.TxTable.snapshot(spark, dir).get
     val expectUntouched = snap1.files.filter(f =>
-      snap1.fileValues.get(f).flatMap(_.get("days(ts)"))
+      snap1.index.values.get(f).flatMap(_.get("days(ts)"))
         .exists(vs => !vs("2024-03-02")))
     assert(expectUntouched.nonEmpty &&
       expectUntouched.forall(snap2.files.toSet),
@@ -699,7 +757,7 @@ class TxSqlSpec extends AnyFunSuite {
     spark.sql("INSERT INTO txdays.tm VALUES (1, DATE '2024-03-05'), " +
       "(2, DATE '2024-04-09')")
     val sm = graft.sources.TxTable.snapshot(spark, s"$root/tm").get
-    assert(sm.fileValues.values.flatMap(_.get("months(d)")).flatten.toSet
+    assert(sm.index.values.values.flatMap(_.get("months(d)")).flatten.toSet
       === Set("2024-03-01", "2024-04-01"))
     // hours() records hour-truncated sets and replaces exact hours
     spark.sql("CREATE TABLE txdays.th (k BIGINT, ts TIMESTAMP) " +
@@ -736,7 +794,7 @@ class TxSqlSpec extends AnyFunSuite {
     rows.toDF("k", "ts").createOrReplaceTempView("tr_src")
     spark.sql("INSERT INTO txtr.tr SELECT k, ts FROM tr_src")
     val snap = TxTable.snapshot(spark, dir).get
-    assert(snap.fileValues.values.exists(_.contains("days(ts)")))
+    assert(snap.index.values.values.exists(_.contains("days(ts)")))
     val q = spark.sql("SELECT k FROM txtr.tr WHERE " +
       "ts >= TIMESTAMP '2024-03-02 00:00:00' AND " +
       "ts < TIMESTAMP '2024-03-03 00:00:00'")
@@ -744,7 +802,7 @@ class TxSqlSpec extends AnyFunSuite {
     assert(got === (24L until 48L), "wrong rows through the day prune")
     val opened = scannedFiles(q)
     val dayFiles = snap.files.filter(f =>
-      snap.fileValues.get(f).flatMap(_.get("days(ts)"))
+      snap.index.values.get(f).flatMap(_.get("days(ts)"))
         .exists(_.contains("2024-03-02"))).map(_.split('/').last).toSet
     assert(opened.subsetOf(dayFiles),
       s"scan opened non-matching-day files: ${opened -- dayFiles}")
@@ -765,7 +823,7 @@ class TxSqlSpec extends AnyFunSuite {
     genA.toDF("k", "ts").createOrReplaceTempView("ev_a")
     spark.sql("INSERT INTO txevo.ev SELECT k, ts FROM ev_a")
     val snapA = TxTable.snapshot(spark, dir).get
-    assert(snapA.fileValues.values.exists(_.contains("days(ts)")))
+    assert(snapA.index.values.values.exists(_.contains("days(ts)")))
     // EVOLVE the live table: days(ts) -> hours(ts), zero rewrites
     val res = spark.sql(
       "CALL txevo.system.evolve_partitions('ev', 'hours(ts)')").head()
@@ -782,10 +840,10 @@ class TxSqlSpec extends AnyFunSuite {
     val snapB = TxTable.snapshot(spark, dir).get
     val newFiles = snapB.files.filterNot(snapA.files.toSet)
     assert(newFiles.nonEmpty && newFiles.forall(f =>
-      snapB.fileValues.get(f).exists(_.contains("hours(ts)"))),
+      snapB.index.values.get(f).exists(_.contains("hours(ts)"))),
       "post-evolution writes must record value sets under the NEW spec")
     assert(snapA.files.forall(f =>
-      snapB.fileValues.get(f).exists(_.contains("days(ts)"))),
+      snapB.index.values.get(f).exists(_.contains("days(ts)"))),
       "old-generation files must keep their old-spec value sets")
     // ONE query spanning the boundary: old files prune via days sets,
     // new files via hours sets — day 2024-03-02 + two hours of 03-04

@@ -26,6 +26,9 @@ class TxTableSpec extends AnyFunSuite {
   private def df(rows: (Int, String)*) =
     rows.toDF("k", "v")
 
+  private def blooms(s: TxTable.Snapshot): Map[String, Array[Byte]] =
+    s.index.bloom.fold(Map.empty[String, Array[Byte]])(_._2)
+
   test("overwrite then read round-trips exactly") {
     val t = freshTable()
     val v = TxTable.overwrite(df(1 -> "a", 2 -> "b"), t)
@@ -171,23 +174,24 @@ class TxTableSpec extends AnyFunSuite {
     val t = freshTable()
     val data = (1 to 1000).map(i => (i, s"r$i")).toDF("k", "v")
       .repartition(8)
-    TxTable.overwriteIndexed(data, t, "k")
+    TxTable.overwriteIndexedMulti(data, t, Seq("k"))
     val snap = TxTable.snapshot(spark, t).get
-    assert(snap.statsCol.contains("k"))
-    assert(snap.stats.size === snap.files.size, "every file needs stats")
+    assert(snap.index.statCols === Seq("k"))
+    assert(snap.index.stats.size === snap.files.size, "every file needs stats")
     // a narrow range must open strictly fewer files than the table has
-    val kept = TxTable.pruneFiles(snap, "k", 10, 20)
+    val kept = TxTable.pruneFilesWhere(spark, t, snap, Seq(("k", 10, 20)))
     assert(kept.nonEmpty && kept.size < snap.files.size,
       s"pruning kept ${kept.size} of ${snap.files.size}")
     // and the pruned read returns exactly the full-scan filter
-    val pruned = TxTable.readRange(spark, t, "k", 10, 20)
+    val pruned = TxTable.readWhere(spark, t, Seq(("k", 10, 20)))
       .as[(Int, String)].collect().sorted
     val full = TxTable.read(spark, t).filter($"k" >= 10 && $"k" <= 20)
       .as[(Int, String)].collect().sorted
     assert(pruned.toSeq === full.toSeq)
     assert(pruned.map(_._1).toSeq === (10 to 20))
     // pruning on a non-indexed column is a no-op, never a filter
-    assert(TxTable.pruneFiles(snap, "other", 0, 1) === snap.files)
+    assert(TxTable.pruneFilesWhere(spark, t, snap, Seq(("other", 0, 1)))
+      === snap.files)
   }
 
   test("multi-column manifest: stats + value sets round-trip and prune conjunctively") {
@@ -203,18 +207,18 @@ class TxTableSpec extends AnyFunSuite {
     TxTable.overwriteIndexedMulti(data, t,
       statCols = Seq("a", "b"), valueCols = Seq("cat", "junk"))
     val snap = TxTable.snapshot(spark, t).get
-    assert(snap.multiStats.size === snap.files.size)
-    assert(snap.multiStats.values.forall(_.keySet === Set("a", "b")))
+    assert(snap.index.stats.size === snap.files.size)
+    assert(snap.index.stats.values.forall(_.keySet === Set("a", "b")))
     // cat has 4 distinct values ≤ the 16 cap → recorded; and the
     // escaped junk value survived the manifest JSON round-trip
-    assert(snap.fileValues.values.forall(v =>
+    assert(snap.index.values.values.forall(v =>
       v.getOrElse("cat", Set.empty).nonEmpty))
-    assert(snap.fileValues.values.head("junk") ===
+    assert(snap.index.values.values.head("junk") ===
       Set("weird \"quote\" \\ back"))
 
     val ranges = Seq(("a", 100.0, 300.0), ("b", 0.0, 500.0))
-    val both = TxTable.pruneFilesWhere(snap, ranges)
-    val aOnly = TxTable.pruneFilesWhere(snap, ranges.take(1))
+    val both = TxTable.pruneFilesWhere(spark, t, snap, ranges)
+    val aOnly = TxTable.pruneFilesWhere(spark, t, snap, ranges.take(1))
     assert(both.nonEmpty && both.size <= aOnly.size)
     assert(aOnly.size < snap.files.size,
       s"a-prune kept ${aOnly.size}/${snap.files.size}")
@@ -230,11 +234,11 @@ class TxTableSpec extends AnyFunSuite {
     assert(got.nonEmpty)
 
     // unknown columns in predicates: never a filter, only a no-op
-    assert(TxTable.pruneFilesWhere(snap,
+    assert(TxTable.pruneFilesWhere(spark, t, snap,
       Seq(("zz", 0.0, 1.0)), Seq(("yy", "x"))) === snap.files)
 
     // a value-equality miss prunes everything cheaply
-    assert(TxTable.pruneFilesWhere(snap, Nil,
+    assert(TxTable.pruneFilesWhere(spark, t, snap, Nil,
       Seq(("cat", "no-such"))).isEmpty)
     assert(TxTable.readWhere(spark, t, Nil,
       Seq(("cat", "no-such"))).count() === 0)
@@ -449,7 +453,7 @@ class TxTableSpec extends AnyFunSuite {
     TxTable.appendPartitionedMulti(rows.filter($"k" > 20), t, Seq("g"))
     val snap1 = TxTable.snapshot(spark, t).get
     val g1Before = snap1.files.filter(f =>
-      snap1.fileValues.get(f).flatMap(_.get("g")).exists(_.contains("g1")))
+      snap1.index.values.get(f).flatMap(_.get("g")).exists(_.contains("g1")))
     assert(g1Before.size > 1, "test setup: g1 must span several files")
     val others = snap1.files.filterNot(g1Before.toSet)
     TxTable.compactWhere(spark, t, "g", Seq("g1"), targetFiles = 1)
@@ -463,7 +467,7 @@ class TxTableSpec extends AnyFunSuite {
     // content identical, value sets recomputed for the new files
     assert(TxTable.read(spark, t).as[(Long, String)].collect().sorted
       .toSeq === (1L to 40L).map(i => i -> s"g${i % 4}").sortBy(identity))
-    assert(g1After.forall(f => snap2.fileValues.get(f)
+    assert(g1After.forall(f => snap2.index.values.get(f)
       .flatMap(_.get("g")).exists(_.contains("g1"))))
     // nothing in scope = no-op at the current head
     val v = TxTable.compactWhere(spark, t, "g", Seq("nope"))
@@ -482,12 +486,12 @@ class TxTableSpec extends AnyFunSuite {
     assert(TxTable.read(spark, t).count() === 40)
     // and the target's stats were rekeyed x → xid, so pruning works
     val snap = TxTable.snapshot(spark, t).get
-    assert(snap.multiStats.values.forall(m =>
+    assert(snap.index.stats.values.forall(m =>
       m.contains("xid") && !m.contains("x")),
-      s"restore kept stale stat keys: ${snap.multiStats.values.headOption}")
-    assert(TxTable.pruneFilesWhere(snap, Seq(("xid", 1.0, 5.0)), Nil)
+      s"restore kept stale stat keys: ${snap.index.stats.values.headOption}")
+    assert(TxTable.pruneFilesWhere(spark, t, snap, Seq(("xid", 1.0, 5.0)), Nil)
       .size < snap.files.size)
-    assert(TxTable.readRange(spark, t, "xid", 1.0, 5.0).count() === 5)
+    assert(TxTable.readWhere(spark, t, Seq(("xid", 1.0, 5.0))).count() === 5)
   }
 
   test("shallow clone: zero-copy, fully independent, pruning carries") {
@@ -508,9 +512,9 @@ class TxTableSpec extends AnyFunSuite {
     assert(TxTable.read(spark, dst).count() === 40)
     // index metadata carried: range reads prune on the clone
     val dsnap = TxTable.snapshot(spark, dst).get
-    assert(TxTable.pruneFilesWhere(dsnap, Seq(("x", 1.0, 5.0)), Nil)
-      .size < dsnap.files.size, "clone lost the stats carry")
-    assert(TxTable.readRange(spark, dst, "x", 1.0, 5.0).count() === 5)
+    assert(TxTable.pruneFilesWhere(spark, dst, dsnap, Seq(("x", 1.0, 5.0)),
+      Nil).size < dsnap.files.size, "clone lost the stats carry")
+    assert(TxTable.readWhere(spark, dst, Seq(("x", 1.0, 5.0))).count() === 5)
     // constraints snapshotted: a violating write on the CLONE refuses
     intercept[Exception] {
       TxTable.append(Seq((-1L, "bad")).toDF("x", "grp"), dst) }
@@ -675,7 +679,7 @@ class TxTableSpec extends AnyFunSuite {
     assert(snap.files.size <= 8)
     // the Z-property: EACH single-column predicate alone prunes files
     for (col0 <- Seq("a", "b")) {
-      val kept = TxTable.pruneFilesWhere(snap, Seq((col0, 10.0, 20.0)))
+      val kept = TxTable.pruneFilesWhere(spark, t, snap, Seq((col0, 10.0, 20.0)))
       assert(kept.nonEmpty && kept.size < snap.files.size,
         s"post-compact $col0-predicate kept ${kept.size}/${snap.files.size}")
     }
@@ -692,16 +696,19 @@ class TxTableSpec extends AnyFunSuite {
     TxTable.append(Seq((9001L, "new")).toDF("id", "u"), t)
     TxTable.compact(spark, t, targetFiles = 6)
     val snap = TxTable.snapshot(spark, t).get
-    assert(snap.bloomCol.contains("id"), "compaction dropped the bloom index")
+    assert(snap.index.bloom.map(_._1).contains("id"),
+      "compaction dropped the bloom index")
     assert(snap.files.size <= 6)
-    assert(snap.blooms.keySet === snap.files.toSet,
+    assert(blooms(snap).keySet === snap.files.toSet,
       "every compacted file must carry a fresh bloom")
-    val kept = TxTable.pruneFilesPoints(snap, "id", Seq("17"))
+    val kept = TxTable.pruneFilesWhere(spark, t, snap, Nil, Nil,
+      Seq("id" -> Seq("17")))
     assert(kept.size < snap.files.size,
       "post-compact point lookup must still prune")
     // the appended row survived compaction and is point-readable
-    assert(TxTable.readPoint(spark, t, "id", "9001").count() === 1)
-    assert(TxTable.readPoints(spark, t, "id", Seq("17", "9001")).count() === 2)
+    assert(TxTable.readWhere(spark, t, Nil, Seq("id" -> "9001")).count() === 1)
+    assert(TxTable.readWhere(spark, t, Nil, Nil,
+      Seq("id" -> Seq("17", "9001"))).count() === 2)
   }
 
   test("compact preserves multi-column stats + value sets") {
@@ -718,9 +725,9 @@ class TxTableSpec extends AnyFunSuite {
     TxTable.compact(spark, t, targetFiles = 6)
     val snap = TxTable.snapshot(spark, t).get
     assert(snap.files.size <= 6)
-    assert(snap.multiStats.nonEmpty && snap.fileValues.nonEmpty,
+    assert(snap.index.stats.nonEmpty && snap.index.values.nonEmpty,
       "compaction dropped multi-column metadata")
-    val kept = TxTable.pruneFilesWhere(snap, Seq(("x", 5.0, 9.0)),
+    val kept = TxTable.pruneFilesWhere(spark, t, snap, Seq(("x", 5.0, 9.0)),
       Seq(("grp", "g1")))
     assert(kept.size < snap.files.size)
     assert(TxTable.readWhere(spark, t, Seq(("x", 5.0, 9.0)),
@@ -732,19 +739,83 @@ class TxTableSpec extends AnyFunSuite {
     val t = freshTable()
     val df = spark.range(0, 1000).select(
       col("id").as("k"), (col("id") % 97).cast("double").as("x"))
-    TxTable.overwriteIndexed(df, t, "x")
-    val before = TxTable.readRange(spark, t, "x", 10.0, 20.0)
+    TxTable.overwriteIndexedMulti(df, t, Seq("x"))
+    val before = TxTable.readWhere(spark, t, Seq(("x", 10.0, 20.0)))
       .collect().map(_.getLong(0)).sorted
     TxTable.compact(spark, t, targetFiles = 2)
     val snap = TxTable.snapshot(spark, t).get
-    assert(snap.statsCol.contains("x"), "compaction dropped the index")
+    assert(snap.index.statCols === Seq("x"), "compaction dropped the index")
     assert(snap.files.size <= 2)
-    val kept = TxTable.pruneFiles(snap, "x", 10.0, 20.0)
+    val kept = TxTable.pruneFilesWhere(spark, t, snap, Seq(("x", 10.0, 20.0)))
     assert(kept.size < snap.files.size,
       "fresh stats must still prune the compacted layout")
-    val after = TxTable.readRange(spark, t, "x", 10.0, 20.0)
+    val after = TxTable.readWhere(spark, t, Seq(("x", 10.0, 20.0)))
       .collect().map(_.getLong(0)).sorted
     assert(after.toSeq == before.toSeq, "pruned read changed content")
+  }
+
+  test("single-column index survives rename then compact: reads prune exactly") {
+    import org.apache.spark.sql.functions.col
+    val t = freshTable()
+    val df = spark.range(0, 1000).select(
+      col("id").as("k"), (col("id") % 97).cast("double").as("x"))
+    TxTable.overwriteIndexedMulti(df, t, Seq("x"))
+    TxTable.renameColumn(spark, t, "x", "xr")
+    // files store the physical name x; the index and reads speak xr
+    TxTable.compact(spark, t, targetFiles = 2)
+    val snap = TxTable.snapshot(spark, t).get
+    assert(snap.op === "compact" && snap.index.statCols === Seq("xr"))
+    val range = Seq(("xr", 10.0, 20.0))
+    val kept = TxTable.pruneFilesWhere(spark, t, snap, range)
+    assert(kept.nonEmpty && kept.size < snap.files.size,
+      s"post-compact range kept ${kept.size}/${snap.files.size}")
+    val got = TxTable.readWhere(spark, t, range).select("k").as[Long]
+      .collect().sorted.toSeq
+    assert(got === (0L until 1000L).filter(k => k % 97 >= 10 && k % 97 <= 20))
+  }
+
+  test("legacy manifests (statscol/stats + blooms) still prune and read exactly") {
+    val t = freshTable()
+    // even keys only, range-clustered: an odd key inside a file's
+    // (min, max) survives the stats but not the bloom
+    val src = (1 to 3000).map(i => (2L * i, s"u${2 * i}")).toDF("k", "u")
+    TxTable.overwriteIndexedMulti(src, t, Seq("k")) // v1: the files
+    val files = TxTable.snapshot(spark, t).get.files
+    val entries = files.map { f =>
+      val ks = spark.read.parquet(s"$t/$f").select("k").as[Long].collect()
+      val bf = org.apache.spark.util.sketch.BloomFilter.create(1000L, 0.01)
+      ks.foreach(k => bf.putString(k.toString))
+      val bos = new java.io.ByteArrayOutputStream()
+      bf.writeTo(bos)
+      (f, ks.min, ks.max,
+        java.util.Base64.getEncoder.encodeToString(bos.toByteArray))
+    }
+    // v2 in the pre-index manifest form: one stats column + blooms
+    val body = s"""{"version":2,"files":[${files.map(f => s""""$f"""").mkString(",")}],""" +
+      s""""statscol":"k","stats":[${entries.map { case (f, mn, mx, _) =>
+        s"""{"path":"$f","min":$mn,"max":$mx}""" }.mkString(",")}],""" +
+      s""""blooms":{"col":"k","files":[${entries.map { case (f, _, _, b) =>
+        s"""{"path":"$f","b64":"$b"}""" }.mkString(",")}]}}"""
+    Files.write(java.nio.file.Paths.get(t, "_graft_log", "v2.json"),
+      body.getBytes("UTF-8"))
+    val snap = TxTable.snapshot(spark, t).get
+    assert(snap.version === 2L && snap.index.statCols === Seq("k") &&
+      snap.index.bloom.map(_._1) === Some("k"))
+    // the legacy stats prune a range; the read is exact
+    val range = Seq(("k", 100.0, 200.0))
+    val kept = TxTable.pruneFilesWhere(spark, t, snap, range)
+    assert(kept.nonEmpty && kept.size < files.size,
+      s"legacy stats kept ${kept.size}/${files.size}")
+    assert(TxTable.readWhere(spark, t, range).select("k").as[Long]
+      .collect().sorted.toSeq === (100L to 200L by 2L))
+    // the legacy blooms prune points the stats cannot exclude
+    val odd = Seq(("k", "1235"))
+    assert(TxTable.pruneFilesWhere(spark, t, snap, Nil, odd).isEmpty)
+    assert(TxTable.readWhere(spark, t, Nil, odd).count() === 0)
+    val even = Seq(("k", "1234"))
+    assert(TxTable.pruneFilesWhere(spark, t, snap, Nil, even).size === 1)
+    assert(TxTable.readWhere(spark, t, Nil, even).select("u").as[String]
+      .collect().toSeq === Seq("u1234"))
   }
 
   test("snapshot on a never-written table is None; read throws") {
@@ -795,13 +866,13 @@ class TxTableSpec extends AnyFunSuite {
     assert(carried.size === total - rewritten)
     // carried files keep their manifest metadata
     carried.foreach { f =>
-      assert(after.multiStats.get(f) === before.multiStats.get(f))
-      assert(after.fileValues.get(f) === before.fileValues.get(f))
+      assert(after.index.stats.get(f) === before.index.stats.get(f))
+      assert(after.index.values.get(f) === before.index.values.get(f))
     }
     // rewritten files got fresh metadata (index survives the delete)
     val fresh = after.files.filterNot(before.files.toSet)
     fresh.foreach { f =>
-      assert(after.multiStats.contains(f), s"no recomputed stats for $f")
+      assert(after.index.stats.contains(f), s"no recomputed stats for $f")
     }
   }
 
@@ -858,15 +929,16 @@ class TxTableSpec extends AnyFunSuite {
     val sz = TxTable.snapshot(spark, tz).get
     val sl = TxTable.snapshot(spark, tl).get
     val bPred = Seq(("b", 10.0, 12.0))
-    val zKept = TxTable.pruneFilesWhere(sz, bPred).size
-    val lKept = TxTable.pruneFilesWhere(sl, bPred).size
+    val zKept = TxTable.pruneFilesWhere(spark, tz, sz, bPred).size
+    val lKept = TxTable.pruneFilesWhere(spark, tl, sl, bPred).size
     assert(lKept === sl.files.size,
       "premise: lexicographic layout cannot prune on the second key")
     assert(zKept < sz.files.size && zKept < lKept,
       s"z-order failed to prune on b: kept $zKept/${sz.files.size} " +
         s"(lexicographic kept $lKept/${sl.files.size})")
     // the FIRST column prunes on the z table too (rectangles, not slices)
-    val aKept = TxTable.pruneFilesWhere(sz, Seq(("a", 10.0, 12.0))).size
+    val aKept =
+      TxTable.pruneFilesWhere(spark, tz, sz, Seq(("a", 10.0, 12.0))).size
     assert(aKept < sz.files.size)
     // pruned reads stay exact on both columns
     val got = TxTable.readWhere(spark, tz, bPred).count()
@@ -881,21 +953,26 @@ class TxTableSpec extends AnyFunSuite {
     TxTable.overwriteIndexedBloom(src, t, "k")
     val snap = TxTable.snapshot(spark, t).get
     assert(snap.files.size >= 4, "premise: multiple files")
-    assert(snap.blooms.size === snap.files.size, "every file indexed")
+    assert(blooms(snap).size === snap.files.size, "every file indexed")
+    def point(c: String, v: String) = Seq(c -> Seq(v))
     // present key: bloom admits at least the owning file, far from all
-    val kept = TxTable.pruneFilesPoint(snap, "k", "1234")
+    val kept = TxTable.pruneFilesWhere(spark, t, snap, Nil, Nil,
+      point("k", "1234"))
     assert(kept.nonEmpty && kept.size < snap.files.size,
       s"bloom failed to prune: ${kept.size}/${snap.files.size}")
-    val got = TxTable.readPoint(spark, t, "k", "1234")
+    val got = TxTable.readWhere(spark, t, Nil, Nil, point("k", "1234"))
       .select("v").as[Long].collect().toSeq
     assert(got === Seq(3702L))
     // absent key: mostly everything prunes (fpp 1%), result is empty
-    val keptMiss = TxTable.pruneFilesPoint(snap, "k", "999999")
+    val keptMiss = TxTable.pruneFilesWhere(spark, t, snap, Nil, Nil,
+      point("k", "999999"))
     assert(keptMiss.size < snap.files.size / 2,
       s"missing key kept ${keptMiss.size}/${snap.files.size} files")
-    assert(TxTable.readPoint(spark, t, "k", "999999").count() === 0)
+    assert(TxTable.readWhere(spark, t, Nil, Nil, point("k", "999999"))
+      .count() === 0)
     // a column without a bloom never prunes
-    assert(TxTable.pruneFilesPoint(snap, "v", "3702") === snap.files)
+    assert(TxTable.pruneFilesWhere(spark, t, snap, Nil, Nil,
+      point("v", "3702")) === snap.files)
   }
 
   test("DML on a bloom-indexed table fails open: blooms drop, lookups stay exact") {
@@ -908,10 +985,11 @@ class TxTableSpec extends AnyFunSuite {
     val after = TxTable.snapshot(spark, t).get
     // no range metadata existed, so ALL files were candidates → all
     // blooms dropped (absent = never pruned); lookups stay CORRECT
-    assert(before.blooms.nonEmpty && after.blooms.isEmpty)
-    assert(TxTable.readPoint(spark, t, "k", "123").count() === 1)
-    assert(TxTable.readPoint(spark, t, "k", "127").count() === 0,
-      "x=7 rows (k%10==7) must be deleted")
+    assert(blooms(before).nonEmpty && blooms(after).isEmpty)
+    assert(TxTable.readWhere(spark, t, Nil, Nil, Seq("k" -> Seq("123")))
+      .count() === 1)
+    assert(TxTable.readWhere(spark, t, Nil, Nil, Seq("k" -> Seq("127")))
+      .count() === 0, "x=7 rows (k%10==7) must be deleted")
   }
 
   test("restore rolls the head back metadata-only; history records it all") {
@@ -978,7 +1056,7 @@ class TxTableSpec extends AnyFunSuite {
     val snap2 = TxTable.snapshot(spark, t).get
     val carried = snap1.files.toSet intersect snap2.files.toSet
     val expectUntouched = snap1.files.filter(f =>
-      snap1.fileValues.get(f).flatMap(_.get("v"))
+      snap1.index.values.get(f).flatMap(_.get("v"))
         .exists(vs => !vs("b") && !vs("d")))
     assert(expectUntouched.nonEmpty, "test setup: no prunable file")
     assert(expectUntouched.forall(carried),
@@ -1021,36 +1099,37 @@ class TxTableSpec extends AnyFunSuite {
     // graft single-column stats + blooms onto the same file set (no
     // single API writes all three families; the commit layer is the
     // contract under test)
-    TxTable.commit(spark, t, 2L, s1.files, s1.txns,
-      statsCol = Some("k"),
-      stats = s1.files.map(f => f -> (0.0, 100.0)).toMap,
-      multiStats = s1.multiStats, fileValues = s1.fileValues,
-      bloomCol = Some("k"),
-      blooms = s1.files.map(f => f -> Array[Byte](1, 2, 3)).toMap)
+    TxTable.commit(spark, t, 2L, s1.files, s1.txns, s1.index ++
+      graft.sources.FileIndex(
+        stats = s1.files.map(f => f -> Map("k" -> (0.0, 100.0))).toMap,
+        bloom = Some("k" ->
+          s1.files.map(f => f -> Array[Byte](1, 2, 3)).toMap)))
     TxTable.overwritePartitions(df(30 -> "b"), t, "v") // v3
     val s3 = TxTable.snapshot(spark, t).get
     val untouched = s1.files.filter(f =>
-      s1.fileValues.get(f).flatMap(_.get("v")).exists(vs => !vs("b")))
+      s1.index.values.get(f).flatMap(_.get("v")).exists(vs => !vs("b")))
     assert(untouched.nonEmpty, "test setup: no provably-untouched file")
-    assert(s3.statsCol === Some("k"), "statsCol dropped by the overwrite")
-    assert(s3.bloomCol === Some("k"), "bloomCol dropped by the overwrite")
+    assert(s3.index.statCols === Seq("k"), "stats dropped by the overwrite")
+    assert(s3.index.bloom.map(_._1) === Some("k"),
+      "bloom dropped by the overwrite")
+    def stats(f: String) = s3.index.stats.get(f).flatMap(_.get("k"))
     untouched.foreach { f =>
       assert(s3.files.contains(f), s"untouched file $f was rewritten")
-      assert(s3.stats.contains(f), s"untouched file $f lost its stats")
-      assert(s3.blooms.contains(f), s"untouched file $f lost its bloom")
-      assert(s3.fileValues.contains(f), s"untouched file $f lost values")
+      assert(stats(f).isDefined, s"untouched file $f lost its stats")
+      assert(blooms(s3).contains(f), s"untouched file $f lost its bloom")
+      assert(s3.index.values.contains(f), s"untouched file $f lost values")
     }
-    // fresh files: stats recomputed (statsCol is declared) for every
+    // fresh files: stats recomputed (k carries stats) for every
     // file with rows (a zero-row remainder file legitimately has no
     // stats entry — absent stats fail open), and never a bloom
     val freshFiles = s3.files.filterNot(s1.files.toSet)
     assert(freshFiles.nonEmpty)
-    assert(freshFiles.exists(s3.stats.contains),
-      s"no fresh file got recomputed stats: ${s3.stats.keySet}")
-    assert(s3.stats.filterKeys(freshFiles.contains).values
-      .exists(_ == (30.0, 30.0)), "fresh stats don't cover the new rows")
+    assert(freshFiles.exists(stats(_).isDefined),
+      s"no fresh file got recomputed stats: ${s3.index.stats.keySet}")
+    assert(freshFiles.flatMap(stats).contains((30.0, 30.0)),
+      "fresh stats don't cover the new rows")
     freshFiles.foreach { f =>
-      assert(!s3.blooms.contains(f), s"fresh file $f claims a bloom")
+      assert(!blooms(s3).contains(f), s"fresh file $f claims a bloom")
     }
     // and the carried metadata still reads correctly
     assert(TxTable.read(spark, t).as[(Int, String)].collect().sorted
@@ -1120,23 +1199,23 @@ class TxTableSpec extends AnyFunSuite {
     // statCols only: files cluster on x, so the x-range prune can skip
     TxTable.overwriteIndexedMulti(grid, t, statCols = Seq("x"))
     val before = TxTable.snapshot(spark, t).get
-    assert(before.multiStats.values.exists(_.contains("x")))
+    assert(before.index.stats.values.exists(_.contains("x")))
     TxTable.renameColumn(spark, t, "x", "xid")
     val after = TxTable.snapshot(spark, t).get
     // stats moved to the new logical key — pruning still works
-    assert(after.multiStats.values.forall(m =>
+    assert(after.index.stats.values.forall(m =>
       m.contains("xid") && !m.contains("x")))
-    val pruned = TxTable.readRange(spark, t, "xid", 1.0, 5.0)
+    val pruned = TxTable.readWhere(spark, t, Seq(("xid", 1.0, 5.0)))
     assert(pruned.as[(Long, String)].collect().map(_._1).sorted.toSeq ===
       (1L to 5L))
     // prune actually skipped files (not just filtered rows)
-    assert(TxTable.pruneFilesWhere(after, Seq(("xid", 1.0, 5.0)), Nil)
-      .size < after.files.size)
+    assert(TxTable.pruneFilesWhere(spark, t, after, Seq(("xid", 1.0, 5.0)),
+      Nil).size < after.files.size)
     // update through the mapping: the rewrite + change routing work
     // on logical names end to end
     TxTable.updateWhere(spark, t, Seq(("xid", 1.0, 1.0)), Nil,
       Map("g" -> lit("patched")))
-    assert(TxTable.readRange(spark, t, "xid", 1.0, 1.0)
+    assert(TxTable.readWhere(spark, t, Seq(("xid", 1.0, 1.0)))
       .select($"g").as[String].head() === "patched")
   }
 
@@ -1279,7 +1358,7 @@ class TxTableSpec extends AnyFunSuite {
     assert(view() === Seq(("a", 2L, 30L), ("b", 1L, 5L),
       ("c", 1L, 7L), ("d", 1L, 9L)))
     val snap1 = TxTable.snapshot(spark, dst).get
-    assert(snap1.fileValues.values.exists(_.contains("g")),
+    assert(snap1.index.values.values.exists(_.contains("g")),
       "partitioned view must record per-file key value sets")
     // delta touches ONLY group a (update) and b (emptied by delete)
     TxTable.deleteWhere(spark, src, Seq(("k", 3.0, 3.0))) // v2
@@ -1293,7 +1372,7 @@ class TxTableSpec extends AnyFunSuite {
     // files provably holding ONLY untouched keys carried byte-identical
     val snap2 = TxTable.snapshot(spark, dst).get
     val untouchedFiles = snap1.files.filter(f =>
-      snap1.fileValues.get(f).flatMap(_.get("g"))
+      snap1.index.values.get(f).flatMap(_.get("g"))
         .exists(vs => !vs("a") && !vs("b")))
     assert(untouchedFiles.nonEmpty, "test setup: no provably-untouched file")
     untouchedFiles.foreach(f => assert(snap2.files.contains(f),
@@ -1427,7 +1506,7 @@ class TxTableSpec extends AnyFunSuite {
     assert(view() === Seq(("a", 2L, 30L), ("b", 1L, 5L),
       ("c", 1L, 7L), ("d", 1L, 9L)))
     val snap1 = TxTable.snapshot(spark, dst).get
-    assert(snap1.fileValues.values.exists(_.contains("g")),
+    assert(snap1.index.values.values.exists(_.contains("g")),
       "partitioned join view must record per-file group value sets")
     // delta touches ONLY group a (fact update via delete+append on
     // k=1) and b (emptied: its only fact deleted)
@@ -1442,7 +1521,7 @@ class TxTableSpec extends AnyFunSuite {
     // files provably holding ONLY untouched groups carried over
     val snap2 = TxTable.snapshot(spark, dst).get
     val untouched = snap1.files.filter(f =>
-      snap1.fileValues.get(f).flatMap(_.get("g"))
+      snap1.index.values.get(f).flatMap(_.get("g"))
         .exists(vs => !vs("a") && !vs("b")))
     assert(untouched.nonEmpty, "test setup: no provably-untouched file")
     untouched.foreach(f => assert(snap2.files.contains(f),
